@@ -43,6 +43,14 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import (
+    Pins,
+    disk_checkpoint,
+    footer_rows,
+    reclaim_shuffles,
+    truncated_checkpoint,
+    work_partitions,
+)
 from .registry import register
 from .session_cache import session_cached
 
@@ -105,25 +113,6 @@ def shingle_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-# The verified near-dup pair table is likewise shared downstream (pair list →
-# dedup_minhash_lsh output, cluster_cc input, corpus-filter input) — the
-# second maintained index of the family. localCheckpoint materializes it
-# eagerly so later consumers skip the whole sketch pipeline — but DISK_ONLY
-# (round-11 sf100 fix): the default MEMORY_AND_DISK level fills the
-# PROTECTED storage half of unified memory (spark.memory.storageFraction)
-# with pair blocks WHILE the producing stage's sorts and aggregates are
-# still running, shrinking the execution pool they can draw on — at sf100
-# (~160M pair rows) the producing stage died with UNABLE_TO_ACQUIRE_MEMORY.
-# The pair table is scanned sequentially by every consumer, so disk-backed
-# blocks cost one streamed read and zero memory contention.
-
-
-def _disk_checkpoint(df: DataFrame) -> DataFrame:
-    from pyspark.storagelevel import StorageLevel
-
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
-
-
 # Below this corpus size the pair-path merge hints come OFF and the planner
 # (static + AQE) picks freely — at bench scale every side of these joins is
 # a few thousand rows and a forced sort-merge join costs ~3× the natural
@@ -138,28 +127,21 @@ PAIR_HINT_MIN_DOCS = 200_000
 
 
 def _corpus_is_big(sf_dir: str) -> bool:
-    # Catch only what a missing/unreadable footer actually raises (ADVICE
-    # r11 + r12): a broad except silently forced the 3-4× slower big-corpus
-    # plan at bench scale on a typo'd sf_dir with no signal.  pyarrow raises
-    # OSError for absent files, but a corrupt/truncated footer raises
-    # pyarrow.ArrowInvalid, which subclasses ValueError (NOT OSError) — both
-    # must degrade to the scale-safe big plan per the contract above.
-    try:
-        import os
+    # an unreadable footer degrades to the big plan, loudly (ADVICE r11 +
+    # r12: a silent fallback hid a typo'd sf_dir behind a 3-4× slower plan)
+    import os
 
-        import pyarrow.parquet as pq
-
-        meta = pq.ParquetFile(os.path.join(sf_dir, "documents.parquet")).metadata
-        return meta.num_rows >= PAIR_HINT_MIN_DOCS
-    except (OSError, ValueError, ImportError) as exc:
+    n = footer_rows(os.path.join(sf_dir, "documents.parquet"))
+    if n is None:
         import sys
 
         print(
-            f"dedup: documents footer read failed for {sf_dir} ({exc}); "
+            f"dedup: documents footer read failed for {sf_dir}; "
             "defaulting to the big-corpus (scale-safe) pair plan",
             file=sys.stderr,
         )
         return True
+    return n >= PAIR_HINT_MIN_DOCS
 
 
 def _spillable(df: DataFrame, big: bool) -> DataFrame:
@@ -170,15 +152,16 @@ def _spillable(df: DataFrame, big: bool) -> DataFrame:
 
 
 def _checkpointed_pairs(sh: DataFrame, big: bool) -> DataFrame:
-    """Materialize the verified pair table (DISK_ONLY checkpoint) and
-    release the sketch's internal persists: the eager checkpoint makes the
+    """Materialize the verified pair table — the family's second
+    maintained index, shared by the pair list, cluster_cc and the corpus
+    filter — as a DISK_ONLY checkpoint, and release the sketch's internal
+    persists: the eager checkpoint makes the
     big path's fingerprint persist dead weight the moment it returns
     (ADVICE r11 — the direct-call path leaked a corpus-sized disk persist
     per invocation)."""
-    pins: list[DataFrame] = []
-    out = _disk_checkpoint(minhash_pairs(sh, big=big, pins=pins))
-    for df in pins:
-        df.unpersist()
+    pins = Pins()
+    out = disk_checkpoint(minhash_pairs(sh, big=big, pins=pins))
+    pins.release()
     return out
 
 
@@ -406,7 +389,7 @@ def pair_overlap_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         sh = _capped(shingle_postings(spark, sf_dir)).persist()
-        out = _disk_checkpoint(_overlap_from_capped(sh))  # eager materialize
+        out = disk_checkpoint(_overlap_from_capped(sh))  # eager materialize
         # the capped-posting persist only served this build; free it
         sh.unpersist()
         return out
@@ -532,7 +515,7 @@ def lsh_bands(sh: DataFrame) -> DataFrame:
 
 
 def minhash_pairs(
-    sh: DataFrame, big: bool = True, pins: list[DataFrame] | None = None
+    sh: DataFrame, big: bool = True, pins: Pins | None = None
 ) -> DataFrame:
     """Verified near-dup pairs from (persisted) shingle postings: MinHash
     signatures → banded LSH buckets (sorted-neighborhood capped) →
@@ -603,6 +586,8 @@ def minhash_pairs(
     # recovering the round-10 dedup_lsh_recall_report regression).
     from pyspark.storagelevel import StorageLevel
 
+    if pins is None:  # a direct caller keeps the persists unowned
+        pins = Pins()
     mh = F.xxhash64(F.col("doc_id"))
     # bands feeds TWO subtrees (the bucket-class aggregate and the rbands
     # join) and sets feeds two more (rbands and the verify's representative
@@ -625,11 +610,9 @@ def minhash_pairs(
     # restructure: the window join then emits fingerprint-keyed pairs
     # directly, removing the two sorts of the (possibly 160M-row) pair
     # table against the 5M-doc fingerprint table that the sf100 probe paid.
-    sets = _set_fingerprints(sh).persist(StorageLevel.DISK_ONLY)
     # sets feeds the (lazy) verify tail, so it cannot unpersist here; the
     # caller releases it once the returned DataFrame is materialized
-    if pins is not None:
-        pins.append(sets)
+    sets = pins.persist(_set_fingerprints(sh), StorageLevel.DISK_ONLY)
     rbands = (
         bands.join(reps, ["band", "key"])
         .join(_spillable(sets.select("doc_id", "__fp"), big), "doc_id")
@@ -641,11 +624,9 @@ def minhash_pairs(
     a, b = rbands.alias("a"), rbands.alias("b")
     # the verify joins read keyed TWICE (distinct fingerprint pairs + the
     # verdict join back); materialize it eagerly so the window join runs
-    # once.  DISK_ONLY persist + count, NOT localCheckpoint: checkpoint
-    # blocks are invisible to DataFrame.unpersist (they bypass the cache
-    # manager), so the caller could never release them via `pins` — the
-    # round-12 fix to the ADVICE r11 leak.
-    keyed = (
+    # once.  DISK_ONLY persist + count (the round-12 fix to the ADVICE r11
+    # leak: the caller releases it with ``pins``).
+    keyed = pins.persist(
         a.join(
             b,
             (F.col("a.band") == F.col("b.band"))
@@ -659,16 +640,14 @@ def minhash_pairs(
             F.col("a.__fp").alias("__fa"),
             F.col("b.__fp").alias("__fb"),
         )
-        .distinct()  # (doc_a, doc_b) determines (__fa, __fb): same cardinality
-        .persist(StorageLevel.DISK_ONLY)
+        .distinct(),  # (doc_a, doc_b) determines (__fa, __fb): same cardinality
+        StorageLevel.DISK_ONLY,
     )
     keyed.count()
     # keyed is materialized: bands served only its build (sets still feeds
     # the verify below — the caller unpersists it AND keyed via `pins` once
     # the returned DataFrame is materialized)
     bands.unpersist()
-    if pins is not None:
-        pins.append(keyed)
     return _verify_keyed(sets, keyed, big=big)
 
 
@@ -921,12 +900,10 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
     # doubles the plan — otherwise both union branches AND every round's join
     # and convergence check recompute the upstream pair pipeline (the full
     # LSH sketch) from scratch
-    from .iterutil import reclaim_shuffles, truncated_checkpoint
-
     # DISK_ONLY: the pair list is read twice (forward/reverse union) and
     # never again; memory-resident blocks would only steal execution memory
     # from the loop's joins (sf100 lesson — see verified_minhash_pairs)
-    p = _disk_checkpoint(pairs)
+    p = disk_checkpoint(pairs)
     # the (possibly huge) pair-building pipeline is now materialized; its
     # shuffle files are dead weight for the whole iteration — reclaim them
     reclaim_shuffles(p)
@@ -948,7 +925,9 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
     spark = p.sparkSession
     cpus = spark.sparkContext.defaultParallelism
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_loop = min(session_parts, max(cpus, (2 * n_pairs * 16) // (32 << 20) + 1))
+    n_loop = min(
+        session_parts, max(cpus, work_partitions(2 * n_pairs, 16, session_parts))
+    )
     # sym is read by EVERY round's neighbor join on v — persist it
     # pre-partitioned on the join key so rounds shuffle only the (small,
     # frontier-sized) label side instead of re-exchanging the full edge

@@ -33,27 +33,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import work_partitions
 from .registry import register
 from .session_cache import session_cached
 
 PR_ROUNDS = 3
 PR_INIT = 10**12  # fixed-point mass units per node
 PR_TOP_K = 20
-
-# ~32 MB of working-set rows per partition for the iterative loops'
-# size-derived partitioning (guide §2.2 — partitions sized by bytes, not by
-# core count; the connected_components loop established the precedent)
-_WORK_BYTES_PER_PART = 32 << 20
-
-
-def _work_partitions(n_rows: int, row_bytes: int, session_parts: int) -> int:
-    """Scale-adaptive partition count for an iterative loop's working set:
-    grows with measured data (~32 MB/partition), clamped to the session's
-    shuffle width, never below 1.  At bench scale a catalog-bounded edge
-    list is a few MB and pays more in per-task scheduling than it gains in
-    parallelism; at 100 TB the same formula yields a wide loop."""
-    return max(1, min(session_parts, (n_rows * row_bytes) // _WORK_BYTES_PER_PART + 1))
-
 
 def _purchase_edges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric distinct customer↔supplier edges ('c:<id>' / 's:<id>')."""
@@ -490,7 +476,7 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # single per-round aggregate).
     n_edges = edges.count()
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    n_work = _work_partitions(2 * n_edges, 24, session_parts)
+    n_work = work_partitions(2 * n_edges, 24, session_parts)
     cur = (
         edges.select("a", "b")
         .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
@@ -599,9 +585,10 @@ register("graph_kcore", graph_kcore, _kcore_sql())
 #
 # Scale shape: per round one fact-free join of the (persisted, src-
 # partitioned) edge list against the node-sized label table, one count
-# aggregate, one row_number cut — all map-side-combinable; labels
-# localCheckpoint per round (same bounded-iteration contract as
-# graph_bfs_layers/dedup_cluster_cc: lineage stays O(1), never O(rounds)).
+# aggregate, one row_number cut — all map-side-combinable.  Only the seed
+# table is checkpointed (lazily, once); the labels are NOT checkpointed per
+# round: with a fixed LPA_ROUNDS each round reads the previous labels once,
+# so the plan grows linearly and there is no re-derivation to cut.
 # The oracle unrolls the LPA_ROUNDS rounds as window-function CTEs.
 # ---------------------------------------------------------------------------
 

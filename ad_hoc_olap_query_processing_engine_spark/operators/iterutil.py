@@ -1,16 +1,26 @@
-"""Iteration-safe checkpointing.
+"""The materialization module: the one way to checkpoint or pin a frame,
+overlap blocking jobs, size a working set from bytes and read a parquet
+footer.
 
-``Dataset.checkpoint`` (and ``localCheckpoint``) captures the checkpointed
-PHYSICAL plan's metadata — output partitioning / ordering expressions — into
-the ``LogicalRDD`` it returns.  In an iterative driver loop (connected
-components, PageRank, k-core, Lloyd rounds, BPE merges) each round's
-LogicalRDD then embeds the previous round's captured metadata, the structure
-NESTS round over round, and Catalyst traversals over it go EXPONENTIAL:
-measured on a 60-node path graph, round time was flat at ~0.6 s through
-round 6 and then ×~7 per round (0.6 → 2.0 → 8.0 → 42 → 265 s) with a
-CONSTANT logical plan string, identical with AQE off and with an extra
-repartition.  Both planning and execution blow up, because both walk the
-nested metadata.
+Release rule (``Pins``): a frame is freed the way it was pinned.  A
+checkpoint's blocks live on its RDD, which ``DataFrame.unpersist`` cannot
+reach, so its owner frees it with ``session_cache.release_blocks``.  A
+persist is freed with a plain ``unpersist()``: ``release_blocks`` walks
+every LogicalRDD leaf of the plan, so on a persisted frame it would also
+free checkpointed INPUTS that belong to someone else.  Query-time
+checkpoints whose frames the caller may still read stay unowned.
+
+Iteration-safe checkpointing: ``Dataset.checkpoint`` (and
+``localCheckpoint``) captures the checkpointed PHYSICAL plan's metadata —
+output partitioning / ordering expressions — into the ``LogicalRDD`` it
+returns.  In an iterative driver loop (connected components, PageRank,
+k-core, Lloyd rounds, BPE merges) each round's LogicalRDD then embeds the
+previous round's captured metadata, the structure NESTS round over round,
+and Catalyst traversals over it go EXPONENTIAL: measured on a 60-node path
+graph, round time was flat at ~0.6 s through round 6 and then ×~7 per
+round (0.6 → 2.0 → 8.0 → 42 → 265 s) with a CONSTANT logical plan string,
+identical with AQE off and with an extra repartition.  Both planning and
+execution blow up, because both walk the nested metadata.
 
 ``truncated_checkpoint`` cures it: materialize via localCheckpoint as
 before, then rebuild the frame as a BARE LogicalRDD over the same
@@ -24,7 +34,14 @@ internal constructor ever moves.
 
 from __future__ import annotations
 
+import threading
+from collections.abc import Callable
+from typing import Any
+
 from pyspark.sql import DataFrame
+from pyspark.storagelevel import StorageLevel
+
+WORK_BYTES_PER_PART = 32 << 20  # guide §2.2: partitions sized by bytes
 
 
 def reclaim_shuffles(df: DataFrame) -> None:
@@ -62,3 +79,80 @@ def truncated_checkpoint(df: DataFrame) -> DataFrame:
         return DataFrame(jdf, spark)
     except Exception:  # pragma: no cover - private-API drift safety net
         return c
+
+
+def disk_checkpoint(df: DataFrame) -> DataFrame:
+    """Eager DISK_ONLY localCheckpoint (round-11 sf100 fix: memory-level
+    blocks filled the storage pool while the producing stage still ran, and
+    it died with UNABLE_TO_ACQUIRE_MEMORY).  Frames pinned this way are
+    read by sequential scans, so disk blocks cost one streamed read."""
+    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
+
+
+class Pins:
+    """Owner of pinned frames.  ``release(*keep)`` frees every owned frame
+    not in ``keep`` (by identity) the way it was pinned, and keeps the
+    kept ones owned.  Thread-safe: ``overlap`` thunks pin concurrently."""
+
+    def __init__(self) -> None:
+        self._owned: list[tuple[DataFrame, bool]] = []  # (frame, checkpointed)
+        self._lock = threading.Lock()
+
+    def _own(self, df: DataFrame, checkpointed: bool) -> DataFrame:
+        with self._lock:
+            self._owned.append((df, checkpointed))
+        return df
+
+    def checkpoint(self, df: DataFrame) -> DataFrame:
+        return self._own(disk_checkpoint(df), True)
+
+    def persist(
+        self, df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK
+    ) -> DataFrame:
+        return self._own(df.persist(level), False)
+
+    def release(self, *keep: DataFrame) -> None:
+        from .session_cache import release_blocks
+
+        with self._lock:
+            owned, self._owned, freed = self._owned, [], []
+            for df, checkpointed in owned:
+                kept = any(df is k for k in keep)
+                (self._owned if kept else freed).append((df, checkpointed))
+        for df, checkpointed in freed:
+            if checkpointed:
+                release_blocks(df)
+            else:
+                df.unpersist()
+
+
+def overlap(*thunks: Callable[[], Any]) -> list[Any]:
+    """Run independent blocking jobs (eager checkpoints, counts, writes)
+    concurrently (guide §2.6: actions are sequential only because the
+    driver calls them sequentially).  Results come back in argument order;
+    the first failing thunk's error, in argument order, is re-raised."""
+    from concurrent.futures import ThreadPoolExecutor
+
+    with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
+        futures = [pool.submit(t) for t in thunks]
+        return [f.result() for f in futures]
+
+
+def work_partitions(n_rows: int, row_bytes: int, session_parts: int) -> int:
+    """Scale-adaptive partition count for a working set: grows with
+    measured data (~32 MB/partition), clamped to the session's shuffle
+    width, never below 1 — a few-MB bench edge list gets one partition,
+    100 TB a wide loop."""
+    return max(1, min(session_parts, (n_rows * row_bytes) // WORK_BYTES_PER_PART + 1))
+
+
+def footer_rows(path: str) -> int | None:
+    """Row count from a parquet footer (driver-side file read, no Spark
+    job), or None if it cannot be read: OSError for a missing file,
+    pyarrow.ArrowInvalid (a ValueError) for a corrupt one, ImportError."""
+    try:
+        import pyarrow.parquet as pq
+
+        return int(pq.ParquetFile(path).metadata.num_rows)
+    except (OSError, ValueError, ImportError):
+        return None

@@ -31,6 +31,7 @@ from .dedup import (
     cc_labels,
     shingle_postings,
 )
+from .iterutil import Pins, disk_checkpoint, overlap
 from .registry import register
 from .text import TEXT_QUALITY_SQL, quality_frame
 
@@ -1401,18 +1402,13 @@ def _incr_base_cands(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _incr_base_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Maintained verified pair table over the base corpus."""
-    from .dedup import (
-        _corpus_is_big,
-        _disk_checkpoint,
-        _verify_candidates,
-        shingle_postings,
-    )
+    from .dedup import _corpus_is_big, _verify_candidates, shingle_postings
     from .session_cache import session_cached
 
     def build() -> DataFrame:
         base_sh = shingle_postings(spark, sf_dir).filter(~_delta_pred())
         cand = _incr_base_cands(spark, sf_dir).select("doc_a", "doc_b").distinct()
-        return _disk_checkpoint(
+        return disk_checkpoint(
             _verify_candidates(base_sh, cand, big=_corpus_is_big(sf_dir))
         )
 
@@ -1427,13 +1423,15 @@ def refresh_pair_store(
     delta_docs: DataFrame,
     postings_all: DataFrame,
     big: bool,
-    pins: list[DataFrame] | None = None,
+    pins: Pins | None = None,
 ) -> dict[str, DataFrame]:
     """ONE exact maintenance step of the near-dup pair store: given a store
     {bands0 (band index), cands0 (per-bucket provenance candidates), pairs0
     (verified pairs)} that is correct for some corpus C, and a batch of NEW
-    documents, produce the dataflow frames plus the refreshed store
-    (bands1/cands1/result) correct for C ∪ batch.  The exactness argument
+    documents, produce the dataflow frames whose legs make up the refreshed
+    store correct for C ∪ batch — bands0 ∪ delta_bands,
+    kept_cands ∪ cand_dirty and kept_base ∪ fresh_verified; each caller
+    assembles it from the legs it materializes.  The exactness argument
     is the pipe_minhash_incremental header above; because each step's
     postcondition is the next step's precondition, the refresh FOLDS over
     any sequence of disjoint batches — which is what the streaming
@@ -1446,36 +1444,16 @@ def refresh_pair_store(
     MATERIALIZED eagerly: it is |batch|-sized, every downstream stage reads
     it several times, and leaving it lazy duplicates the delta subtree
     combinatorially (measured: >1,000 copies of the delta scan in one lazy
-    plan). ``pins`` collects the materialized frames so the caller can
-    release their blocks once the refreshed pair table is materialized —
-    the same discipline as dedup.minhash_pairs."""
-    from .dedup import (
-        _disk_checkpoint,
-        _shingles,
-        _verify_candidates,
-        lsh_bands,
-    )
+    plan). Every frame the refresh materializes is pinned in ``pins``, so
+    the caller releases the working set once the refreshed store is
+    materialized, keeping the frames it adopts into the store — the same
+    discipline as dedup.minhash_pairs.  The maintenance path is a chain of
+    small blocking jobs whose cost is scheduling latency, not compute, so
+    the independent ones run concurrently (iterutil.overlap)."""
+    from .dedup import CC_BROADCAST_MAX_ROWS, _shingles, _verify_candidates, lsh_bands
 
-    def _pin(df: DataFrame) -> DataFrame:
-        out = _disk_checkpoint(df)
-        if pins is not None:
-            pins.append(out)
-        return out
-
-    def _overlap(*thunks):
-        """Run independent blocking materializations (eager checkpoints /
-        counts) concurrently (guide §2.6: actions are only sequential
-        because the driver calls them sequentially).  The maintenance path
-        is a chain of small blocking jobs whose cost is scheduling latency,
-        not compute — overlapping the independent ones shortens the
-        per-batch critical path both here and under the streaming fold.
-        list.append from the pool threads is safe for ``pins``."""
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-            return [f.result() for f in [pool.submit(t) for t in thunks]]
-
-    from .dedup import CC_BROADCAST_MAX_ROWS
+    if pins is None:  # a direct caller keeps the working set unowned
+        pins = Pins()
 
     def _gated(df: DataFrame, n: int) -> DataFrame:
         """Broadcast a materialized batch-derived side when its MEASURED
@@ -1491,26 +1469,26 @@ def refresh_pair_store(
     # the band chain and the id-list chain are independent until ``fresh``
     # — materialize them concurrently (round 13)
     def _band_chain():
-        delta_bands = _pin(lsh_bands(delta_sh))
+        delta_bands = pins.checkpoint(lsh_bands(delta_sh))
         # read by FOUR joins below — materialize once, size once
-        dirty = _pin(delta_bands.select("band", "key").distinct())
+        dirty = pins.checkpoint(delta_bands.select("band", "key").distinct())
         return delta_bands, dirty, dirty.count()
 
     def _id_chain():
-        delta_ids = _pin(delta_docs.select("doc_id").distinct())
+        delta_ids = pins.checkpoint(delta_docs.select("doc_id").distinct())
         return delta_ids, delta_ids.count()
 
-    (delta_bands, dirty, n_dirty), (delta_ids, n_delta) = _overlap(
+    (delta_bands, dirty, n_dirty), (delta_ids, n_delta) = overlap(
         _band_chain, _id_chain
     )
     bdirty = _gated(dirty, n_dirty)
     dirty_members = bands0.join(bdirty, ["band", "key"], "left_semi").unionByName(
         delta_bands
     )
-    # read by the fresh leg, the survivor leg and cands1 — materialize once
-    cand_dirty = _pin(_windowed_bucket_pairs(dirty_members))
+    # read by the fresh leg, the survivor leg and the refreshed candidate
+    # store — materialize once
+    cand_dirty = pins.checkpoint(_windowed_bucket_pairs(dirty_members))
     kept_cands = cands0.join(bdirty, ["band", "key"], "left_anti")
-    cands1 = kept_cands.unionByName(cand_dirty)
 
     # FRESH pairs without any store-sized shuffle (round-13 profile: the
     # previous form's ``distinct`` + anti-join over the FULL candidate
@@ -1532,7 +1510,7 @@ def refresh_pair_store(
     # both hang off cand_dirty but not off each other — overlap their
     # materializations too
     def _fresh_chain():
-        return _pin(
+        return pins.checkpoint(
             cd_pairs.join(da, "doc_a", "left_semi")
             .unionByName(cd_pairs.join(db, "doc_b", "left_semi"))
             .distinct()
@@ -1540,19 +1518,19 @@ def refresh_pair_store(
 
     def _risk_chain():
         dirty_prov = cands0.join(bdirty, ["band", "key"], "left_semi")
-        pairs_at_risk = _pin(dirty_prov.select(*pair_key).distinct())
+        pairs_at_risk = pins.checkpoint(dirty_prov.select(*pair_key).distinct())
         return pairs_at_risk, pairs_at_risk.count()
 
-    fresh, (pairs_at_risk, n_risk) = _overlap(_fresh_chain, _risk_chain)
+    fresh, (pairs_at_risk, n_risk) = overlap(_fresh_chain, _risk_chain)
 
     # The VERIFY leg (fetch involved shingle sets, score the fresh pairs)
     # and the REMOVAL chain below are independent once ``fresh`` and
     # ``pairs_at_risk`` exist — materialize them concurrently (round 14,
     # guide §2.6: the verify job was serialized behind the removal chain,
     # the longest single piece of the fold's critical path).  The verified
-    # fresh-pair table comes back CHECKPOINTED and is NOT pinned: both
-    # callers adopt it into the refreshed store as a bare-LogicalRDD union
-    # leg (no union-sized rewrite of kept_base + fresh rows).
+    # fresh-pair table comes back CHECKPOINTED: both callers adopt it into
+    # the refreshed store as a bare-LogicalRDD union leg (no union-sized
+    # rewrite of kept_base + fresh rows), keeping it at release.
     def _verify_leg() -> DataFrame:
         # verification fetches shingle sets for the INVOLVED doc_ids only,
         # via a semi-join into the maintained posting index (base + delta)
@@ -1562,7 +1540,7 @@ def refresh_pair_store(
             .distinct()
         )
         sh_involved = postings_all.join(involved, "doc_id", "left_semi")
-        return _disk_checkpoint(_verify_candidates(sh_involved, fresh, big=big))
+        return pins.checkpoint(_verify_candidates(sh_involved, fresh, big=big))
 
     # REMOVED pairs, same discipline: a verified base pair can drop out
     # only if EVERY bucket that contributed it is dirty and none of the
@@ -1581,14 +1559,14 @@ def refresh_pair_store(
             .select(*pair_key)
             .distinct()
         )
-        removed = _pin(
+        removed = pins.checkpoint(
             pairs_at_risk.join(cd_pairs, pair_key, "left_anti").join(
                 clean_contrib, pair_key, "left_anti"
             )
         )
         return removed, removed.count()
 
-    fresh_verified, (removed, n_removed) = _overlap(_verify_leg, _removed_leg)
+    fresh_verified, (removed, n_removed) = overlap(_verify_leg, _removed_leg)
     kept_base = pairs0.join(_gated(removed, n_removed), pair_key, "left_anti")
     return {
         "delta_bands": delta_bands,
@@ -1600,14 +1578,11 @@ def refresh_pair_store(
         "kept_base": kept_base,
         "kept_cands": kept_cands,
         "cand_dirty": cand_dirty,
-        "bands1": bands0.unionByName(delta_bands),
-        "cands1": cands1,
-        "result": kept_base.unionByName(fresh_verified),
     }
 
 
 def _incr_delta_frames(
-    spark: SparkSession, sf_dir: str, pins: list[DataFrame] | None = None
+    spark: SparkSession, sf_dir: str, pins: Pins | None = None
 ) -> dict[str, DataFrame]:
     """The one-shot delta-maintenance dataflow over the session-cached base
     artifacts — refresh_pair_store applied to the simulated CDC batch,
@@ -1642,21 +1617,19 @@ def pipe_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     label maintenance) read the family's maintained artifact, and the
     previous store generation is released checkpoint-aware by the
     invalidate — one generation live, same discipline as the stream fold."""
-    from .dedup import _disk_checkpoint
-    from .session_cache import invalidate, release_blocks, session_cached
+    from .session_cache import invalidate, session_cached
 
     def build() -> DataFrame:
-        pins: list[DataFrame] = []
+        pins = Pins()
         frames = _incr_delta_frames(spark, sf_dir, pins=pins)
         # kept leg checkpointed separately; the fresh leg comes back already
         # checkpointed from the refresh — the result is a union of two bare
         # LogicalRDDs (the stream fold's pattern), so the refreshed table is
         # never rewritten a second time just to union its legs
-        out = _disk_checkpoint(frames["kept_base"]).unionByName(
+        out = disk_checkpoint(frames["kept_base"]).unionByName(
             frames["fresh_verified"]
         )
-        for df in pins:
-            release_blocks(df)
+        pins.release(frames["fresh_verified"])
         return out
 
     invalidate("mh_incr_pairs")
@@ -1735,7 +1708,6 @@ def _incr_base_cc(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _cc_incremental_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """The label-maintenance dataflow, exposed piecewise so tests can pin
     that the iterative recompute touches only affected-component edges."""
-    from .dedup import _disk_checkpoint
 
     base = _incr_base_pairs(spark, sf_dir)
     refreshed = pipe_minhash_incremental(spark, sf_dir)
@@ -1753,7 +1725,7 @@ def _cc_incremental_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFr
         .distinct()
     )
     # batch-sized: one row per OLD component touched by the batch
-    affected = _disk_checkpoint(
+    affected = disk_checkpoint(
         delta_nodes.join(l0, "doc_id")
         .select(F.col("cluster_id").alias("__al"))
         .distinct()

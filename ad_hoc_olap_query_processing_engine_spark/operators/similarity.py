@@ -61,6 +61,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import footer_rows, overlap
 from .registry import register
 
 N_QUERIES = 10
@@ -337,15 +338,10 @@ def _peek_rows(sf_dir: str) -> int:
     Falls back to 0, which callers must treat as "unknown: use the
     fraction's floor-free default"."""
     if sf_dir not in _ROWS_CACHE:
-        try:
-            import os
+        import os
 
-            import pyarrow.parquet as pq
-
-            pf = pq.ParquetFile(os.path.join(sf_dir, "embeddings.parquet"))
-            _ROWS_CACHE[sf_dir] = int(pf.metadata.num_rows)
-        except Exception:
-            _ROWS_CACHE[sf_dir] = 0
+        n = footer_rows(os.path.join(sf_dir, "embeddings.parquet"))
+        _ROWS_CACHE[sf_dir] = 0 if n is None else n
     return _ROWS_CACHE[sf_dir]
 
 
@@ -2472,7 +2468,7 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         ("pq", sim_pq_ann),
         ("ivfpq", sim_ivfpq_ann),
     ]
-    from concurrent.futures import ThreadPoolExecutor
+    from functools import partial
 
     def _branch(fn) -> DataFrame:
         # eager: the blocking materialization IS the fan-out (one job per
@@ -2481,11 +2477,10 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
             fn(spark, sf_dir).select("query_id", "vec_id").localCheckpoint(eager=True)
         )
 
-    with ThreadPoolExecutor(max_workers=1 + len(methods)) as pool:
-        brute_fut = pool.submit(_branch, sim_brute_topk)
-        method_futs = [(mname, pool.submit(_branch, fn)) for mname, fn in methods]
-        brute = brute_fut.result()
-        method_frames = [(mname, fut.result()) for mname, fut in method_futs]
+    brute, *frames = overlap(
+        partial(_branch, sim_brute_topk), *[partial(_branch, fn) for _, fn in methods]
+    )
+    method_frames = [(mname, m) for (mname, _), m in zip(methods, frames)]
     total = brute.agg(F.count(F.lit(1)).alias("__n_total"))
     out = None
     for mname, m in method_frames:

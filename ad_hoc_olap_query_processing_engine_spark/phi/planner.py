@@ -77,6 +77,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
+from ..operators.iterutil import Pins
 from .ast import Cond, GroupingVar, Having, Operand, PhiQuery
 
 _PYOPS = {
@@ -102,9 +103,10 @@ class PhiPlanError(ValueError):
     pass
 
 
-# Persist the (small) group table when staged join GVs reuse it; flip off to
-# A/B the raw recompute plan.
-PERSIST_GROUP_TABLE = True
+# Owner of the group-table persists of the latest compile_phi call; the
+# next call releases them.  A persist keeps its lineage, so a frame from an
+# earlier call still evaluates afterwards, by recomputing its group table.
+_GROUP_PINS = Pins()
 
 
 @dataclass
@@ -326,6 +328,7 @@ def _rowcond_col(c: Cond, g0_names: frozenset[str] | set[str]) -> Column:
 
 def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
     """Compile a PhiQuery against the given input relation."""
+    _GROUP_PINS.release()
     v = q.group_attrs
     base = sales
     where = _sigma(q.where)
@@ -410,13 +413,11 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
     # and AQE broadcasts the (tiny) totals side. The group table feeds both
     # sides of those join-backs, so persist it — otherwise the totals branch
     # would recompute the whole fact-table pipeline.
-    if PERSIST_GROUP_TABLE and any(
+    if any(
         (p.strategy == "window" and p.theta is None) or p.strategy == "group_join"
         for p in plans
     ):
-        from pyspark import StorageLevel
-
-        groups = groups.persist(StorageLevel.MEMORY_AND_DISK)
+        groups = _GROUP_PINS.persist(groups)
     for p in plans:
         if p.strategy != "window":
             continue
@@ -495,10 +496,8 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
     # anchor); it is small by definition (|G| ≪ |sales|), so persist it and
     # pay the fact-table pipeline once instead of once per reference.
     acc = groups
-    if PERSIST_GROUP_TABLE and any(p.strategy == "join" for p in plans):
-        from pyspark import StorageLevel
-
-        acc = acc.persist(StorageLevel.MEMORY_AND_DISK)
+    if any(p.strategy == "join" for p in plans):
+        acc = _GROUP_PINS.persist(acc)
     for p in plans:
         if p.strategy != "join":
             continue

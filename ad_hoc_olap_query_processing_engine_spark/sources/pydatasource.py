@@ -85,14 +85,14 @@ class _RowGroupReader(DataSourceReader):
     def partitions(self):  # driver-side: footer metadata only
         import pyarrow.parquet as pq
 
-        n = pq.ParquetFile(self._path).metadata.num_row_groups
+        n = pq.ParquetFile(self._path).num_row_groups
         return [_RowGroupPartition(i) for i in range(max(n, 1))]
 
     def read(self, partition: _RowGroupPartition):  # executor-side
         import pyarrow.parquet as pq
 
         pf = pq.ParquetFile(self._path)
-        if partition.index >= pf.metadata.num_row_groups:
+        if partition.index >= pf.num_row_groups:
             return
         table = pf.read_row_group(partition.index, columns=self._columns)
         yield from table.to_batches()

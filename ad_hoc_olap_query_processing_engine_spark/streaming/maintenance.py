@@ -37,6 +37,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..operators.iterutil import Pins, disk_checkpoint, overlap
 from ..operators.registry import register
 from ..sources.catalog import load_table
 
@@ -72,13 +73,10 @@ def _write_batches(spark: SparkSession, sf_dir: str) -> str:
         os.utime(dst, (i + 1, i + 1))  # ascending mtimes → stable offer order
         shutil.rmtree(tmp)
 
-    # the N batch writes are independent single-file jobs — overlap them
-    # (guide §2.6); mtimes are set per file after its write, so the offer
-    # order stays deterministic regardless of write completion order
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=N_STREAM_BATCHES) as pool:
-        list(pool.map(write_one, range(N_STREAM_BATCHES)))
+    # the N batch writes are independent single-file jobs — overlap them;
+    # mtimes are set per file after its write, so the offer order stays
+    # deterministic regardless of write completion order
+    overlap(*[lambda i=i: write_one(i) for i in range(N_STREAM_BATCHES)])
     return out
 
 
@@ -99,7 +97,6 @@ def _stream_empty_store(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     stream's actual per-batch work."""
     from ..operators.dedup import (
         _corpus_is_big,
-        _disk_checkpoint,
         _shingles,
         _verify_candidates,
         lsh_bands,
@@ -110,29 +107,23 @@ def _stream_empty_store(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
     holder: dict[str, DataFrame] = {}
 
     def build() -> dict[str, DataFrame]:
-        from concurrent.futures import ThreadPoolExecutor
-
         docs = load_table(spark, "documents", sf_dir)
         empty_sh = _shingles(docs.limit(0))
         empty_bands = lsh_bands(empty_sh)
         empty_cands = _windowed_bucket_pairs(empty_bands)
-        thunks = [
-            lambda: _disk_checkpoint(empty_bands),
-            lambda: _disk_checkpoint(empty_cands),
-            lambda: _disk_checkpoint(
+        # overlap the independent blocking checkpoints
+        bands, cands, pairs, postings = overlap(
+            lambda: disk_checkpoint(empty_bands),
+            lambda: disk_checkpoint(empty_cands),
+            lambda: disk_checkpoint(
                 _verify_candidates(
                     empty_sh,
                     empty_cands.select("doc_a", "doc_b"),
                     big=_corpus_is_big(sf_dir),
                 )
             ),
-            lambda: _disk_checkpoint(empty_sh),
-        ]
-        # overlap the independent blocking checkpoints (guide §2.6)
-        with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-            bands, cands, pairs, postings = [
-                f.result() for f in [pool.submit(t) for t in thunks]
-            ]
+            lambda: disk_checkpoint(empty_sh),
+        )
         holder.update(
             {"bands": bands, "cands": cands, "pairs": pairs, "postings": postings}
         )
@@ -170,36 +161,23 @@ def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..operators.dedup import _corpus_is_big, _disk_checkpoint, _shingles
+    from ..operators.dedup import _corpus_is_big, _shingles
     from ..operators.pipeline import refresh_pair_store
-    from ..operators.session_cache import release_blocks
 
     batch_src = _write_batches(spark, sf_dir)
     big = _corpus_is_big(sf_dir)
 
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _par(*thunks):
-        """Overlap independent blocking checkpoints (guide §2.6) — the fold
-        path is scheduling-latency-bound, not compute-bound."""
-        with ThreadPoolExecutor(max_workers=len(thunks)) as pool:
-            return [f.result() for f in [pool.submit(t) for t in thunks]]
-
     # generation-0 empty store: a session-cached immutable artifact (see
-    # _stream_empty_store) — re-drives reuse it, and its frames are never
-    # released here (the batch dir always yields ≥1 fold, so the final
-    # generation's frames below are never the g0 ones)
+    # _stream_empty_store) — re-drives reuse it, and the drive never owns
+    # its frames
     g0 = _stream_empty_store(spark, sf_dir)
-    state: dict[str, object] = {
-        "bands": g0["bands"],
-        "cands": g0["cands"],
-        "pairs": g0["pairs"],
-        "postings": g0["postings"],
-        "pins": [],
-        # append-only store legs (band index, posting index) accumulated
-        # across the whole drive; released only after the stream drains
-        "leg_pins": [],
-    }
+    state: dict[str, DataFrame] = dict(g0)
+    # ONE owner for everything the drive pins: each fold releases all but
+    # the live store (one generation of cands/pairs plus the append-only
+    # band and posting legs accumulated across the drive)
+    pins = Pins()
+    legs: list[DataFrame] = []
+    pair_legs: list[DataFrame] = []
 
     def fold(bdf: DataFrame, batch_id: int) -> None:
         # The band and posting stores are APPEND-ONLY under inserts, so the
@@ -210,9 +188,8 @@ def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Catalyst's union constraint rule.  The pruned/recomputed stores
         # (cands, pairs) genuinely change per batch and keep their
         # generation checkpoints.
-        sh_b = _disk_checkpoint(_shingles(bdf))
+        sh_b = pins.checkpoint(_shingles(bdf))
         postings_all = state["postings"].unionByName(sh_b)
-        pins: list[DataFrame] = []
         frames = refresh_pair_store(
             spark,
             state["bands"],
@@ -231,38 +208,24 @@ def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         # is an anti-join trips Catalyst's union constraint rewrite with
         # the right side's attributes (NoSuchElementException: key not
         # found: band#N); unions of bare LogicalRDDs rewrite cleanly.
-        cand_dirty = frames["cand_dirty"]  # pinned inside the refresh
-        delta_bands = frames["delta_bands"]  # pinned; adopted as a band leg
-        fresh_verified_ck = frames["fresh_verified"]  # checkpointed in-refresh
-        # the two pruned-store generation legs are independent — overlap them
-        kept_cands_ck, kept_base_ck = _par(
-            lambda: _disk_checkpoint(frames["kept_cands"]),
-            lambda: _disk_checkpoint(frames["kept_base"]),
+        # The two pruned-store generation legs are independent — overlap.
+        kept_cands_ck, kept_base_ck = overlap(
+            lambda: pins.checkpoint(frames["kept_cands"]),
+            lambda: pins.checkpoint(frames["kept_base"]),
         )
-        new_state = {
-            "bands": state["bands"].unionByName(delta_bands),
-            "cands": kept_cands_ck.unionByName(cand_dirty),
-            "pairs": kept_base_ck.unionByName(fresh_verified_ck),
-            "postings": postings_all,
-        }
-        owned = [
-            kept_cands_ck,
-            cand_dirty,  # adopted into the store — excluded from pin release
-            kept_base_ck,
-            fresh_verified_ck,
-        ]
-        for df in pins:
-            if df is not cand_dirty and df is not delta_bands:
-                release_blocks(df)
-        for old in state["pins"]:
-            release_blocks(old)
-        state["pins"] = owned
-        state["leg_pins"].extend([sh_b, delta_bands])
-        state.update(new_state)
+        legs.extend([sh_b, frames["delta_bands"]])
+        state["bands"] = state["bands"].unionByName(frames["delta_bands"])
+        state["cands"] = kept_cands_ck.unionByName(frames["cand_dirty"])
+        state["pairs"] = kept_base_ck.unionByName(frames["fresh_verified"])
+        state["postings"] = postings_all
+        pair_legs[:] = [kept_base_ck, frames["fresh_verified"]]
+        pins.release(*legs, kept_cands_ck, frames["cand_dirty"], *pair_legs)
 
-    raw_schema = spark.read.parquet(batch_src).schema
+    # the batches are slices of the documents table: take the schema from
+    # the table, so a batch dir without files drives zero folds (guarded
+    # below) instead of failing schema inference
     stream = (
-        spark.readStream.schema(raw_schema)
+        spark.readStream.schema(load_table(spark, "documents", sf_dir).schema)
         .option("maxFilesPerTrigger", "1")
         .parquet(batch_src)
     )
@@ -272,17 +235,16 @@ def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         .start()
     )
     q.awaitTermination()
-    # the caller consumes only the pair table; the final generation's other
-    # artifacts would otherwise leak one block set per invocation.  The
-    # band/posting stores are unions over the per-batch legs plus the
-    # session-cached g0 frames — release the legs EXPLICITLY (walking the
-    # union would also unpersist the shared g0 checkpoints); the pruned
-    # candidate store holds no g0 leg once ≥1 batch folded (identity guard
-    # for the zero-batch edge).
-    for leg in state["leg_pins"]:
-        release_blocks(leg)
-    if state["cands"] is not g0["cands"]:
-        release_blocks(state["cands"])
+    if state["pairs"] is g0["pairs"]:
+        # returning the g0 frame would hand the caller blocks that the next
+        # invalidate of this entry releases out from under the cached g0
+        raise RuntimeError(
+            f"stream_minhash_maintenance: no micro-batch folded from {batch_src}"
+        )
+    # the caller consumes only the pair table; release everything else the
+    # drive pinned (final cands generation, band and posting legs) — never
+    # the session-cached g0 frames, which the drive does not own
+    pins.release(*pair_legs)
     return state["pairs"]
 
 

@@ -6,19 +6,19 @@ Usage: python scripts/crosscheck.py [name ...]   (default: all)
 
 from __future__ import annotations
 
+import os
 import sys
 
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, "/root/repo")
+# this checkout's root, so a copy of the repo imports its own package
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from ad_hoc_olap_query_processing_engine_spark.oracle_lint import TABLES, bad_columns
 
 # overridable so the sf1 scale sweep (scripts/scaleup.py) can reuse this
 # harness against the in-repo scaled data
-import os
-
 SF_DIR = os.environ.get("CROSSCHECK_SF_DIR", "/root/testdata/sf0.01")
 
 

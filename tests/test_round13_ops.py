@@ -242,12 +242,10 @@ class TestMinhashIncremental:
         assert len(inc) > 0
 
     def test_delta_stage_touches_only_dirty_buckets(self, spark):
-        from ad_hoc_olap_query_processing_engine_spark.operators import (
-            pipeline,
-            session_cache,
-        )
+        from ad_hoc_olap_query_processing_engine_spark.operators import pipeline
+        from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import Pins
 
-        pins = []
+        pins = Pins()
         frames = pipeline._incr_delta_frames(spark, SF, pins=pins)
         try:
             base_bands = pipeline._incr_base_bands(spark, SF).count()
@@ -267,11 +265,9 @@ class TestMinhashIncremental:
             )
             assert len(fresh) > 0
         finally:
-            for df in pins:
-                session_cache.release_blocks(df)
-            # round 14: the verified fresh-pair leg comes back checkpointed
-            # and unpinned (adopted by the callers) — release it here too
-            session_cache.release_blocks(frames["fresh_verified"])
+            # every frame the refresh materializes, the verified fresh-pair
+            # leg included, is pinned in ``pins``
+            pins.release()
 
     def test_batch_working_set_released(self, spark):
         """The registered query materializes the batch working set and must
@@ -287,7 +283,7 @@ class TestMinhashIncremental:
         df.count()
         after = _persisted_rdd_ids(spark)
         # exactly the cached result artifact (and any base artifacts built
-        # lazily) may remain — the _pin() checkpoints of the build
+        # lazily) may remain — the pinned checkpoints of the build
         # (delta_bands, cand_dirty, fresh, …) must be gone; they are
         # |batch|-sized frames with single-digit partition counts, so bound
         # the growth instead of fingerprinting ids: the result's two

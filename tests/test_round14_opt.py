@@ -1,7 +1,7 @@
 """Round-14 optimization pins.
 
 1. The iterative graph loops size their working partitioning by measured
-   bytes (``graph._work_partitions``), clamped to the session width — the
+   bytes (``iterutil.work_partitions``), clamped to the session width — the
    formula must stay scale-adaptive (grow with rows, clamp at the session,
    floor at 1), or the bench-scale win silently becomes a 100 TB
    single-partition pathology.
@@ -21,23 +21,23 @@ SF = "/root/testdata/sf0.001"
 
 class TestWorkPartitionsFormula:
     def test_scale_adaptive(self):
-        from ad_hoc_olap_query_processing_engine_spark.operators.graph import (
-            _WORK_BYTES_PER_PART,
-            _work_partitions,
+        from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import (
+            WORK_BYTES_PER_PART,
+            work_partitions,
         )
 
         # tiny working sets collapse to one partition regardless of width
-        assert _work_partitions(300_000, 24, 32) == 1
-        assert _work_partitions(0, 24, 32) == 1
+        assert work_partitions(300_000, 24, 32) == 1
+        assert work_partitions(0, 24, 32) == 1
         # grows with measured rows…
-        rows_per_part = _WORK_BYTES_PER_PART // 24
-        assert _work_partitions(10 * rows_per_part, 24, 1024) == 10
+        rows_per_part = WORK_BYTES_PER_PART // 24
+        assert work_partitions(10 * rows_per_part, 24, 1024) == 10
         # …and clamps at the session's shuffle width (never exceeds it)
-        assert _work_partitions(10**12, 24, 32) == 32
+        assert work_partitions(10**12, 24, 32) == 32
         # monotone in rows
         prev = 0
         for rows in (10**3, 10**6, 10**9, 10**12):
-            cur = _work_partitions(rows, 24, 10**6)
+            cur = work_partitions(rows, 24, 10**6)
             assert cur >= prev
             prev = cur
 
