@@ -115,7 +115,10 @@ ASOF LEFT JOIN (SELECT user_id, ts, value FROM events WHERE event_type = 'purcha
 ASOF_TOL_US = 3_600_000_000  # 1 hour
 
 
-def rel_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _click_purchase_candidates(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Every click with its backward (``__b``, at-or-before) and strictly
+    forward (``__f``) purchase candidate as ``struct<us, value>``, both from
+    one sorted partition pass.  Shared by the as-of siblings."""
     ev = load_table(spark, "events", sf_dir)
     clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
     purchases = ev.filter(F.col("event_type") == "purchase").select(
@@ -145,26 +148,23 @@ def rel_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
     # exact-(user, ts) duplicate purchases is arbitrary, so the oracle
     # contract (like rel_asof_join's) assumes the event stream has no such
     # duplicates, which the generated data satisfies
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy("__ts", "__is_left", F.asc_nulls_first("__r"))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
+    w = W.partitionBy("user_id").orderBy("__ts", "__is_left", F.asc_nulls_first("__r"))
+    wb = w.rowsBetween(W.unboundedPreceding, 0)
     # forward over the SAME sort: frame starts at the current row and runs
     # forward; at equal ts the left row precedes nothing on the right side
     # frame-wise (rights at the same ts sort earlier, hence NOT in the
     # forward frame) → strictly-later semantics, mirrored in the oracle with
     # e.ts < p.ts
-    wf = (
-        W.partitionBy("user_id")
-        .orderBy("__ts", "__is_left", F.asc_nulls_first("__r"))
-        .rowsBetween(0, W.unboundedFollowing)
-    )
-    out = (
+    wf = w.rowsBetween(0, W.unboundedFollowing)
+    return (
         u.withColumn("__b", F.last("__r", ignorenulls=True).over(wb))
         .withColumn("__f", F.first("__r", ignorenulls=True).over(wf))
         .filter(F.col("__is_left") == 1)
     )
+
+
+def rel_asof_tolerance(spark: SparkSession, sf_dir: str) -> DataFrame:
+    out = _click_purchase_candidates(spark, sf_dir)
     us = F.unix_micros("__ts")
     return out.select(
         "event_id",
@@ -212,41 +212,7 @@ FROM back b JOIN fwd f ON b.event_id = f.event_id"""
 
 
 def rel_asof_nearest(spark: SparkSession, sf_dir: str) -> DataFrame:
-    ev = load_table(spark, "events", sf_dir)
-    clicks = ev.filter(F.col("event_type") == "click").select("event_id", "user_id", "ts")
-    purchases = ev.filter(F.col("event_type") == "purchase").select(
-        "user_id", "ts", "value", F.unix_micros("ts").alias("p_us")
-    )
-    l_tagged = clicks.select(
-        "event_id",
-        "user_id",
-        F.col("ts").alias("__ts"),
-        F.lit(1).alias("__is_left"),
-        F.lit(None).cast("struct<us:bigint,value:double>").alias("__r"),
-    )
-    r_tagged = purchases.select(
-        F.lit(None).cast("bigint").alias("event_id"),
-        "user_id",
-        F.col("ts").alias("__ts"),
-        F.lit(0).alias("__is_left"),
-        F.struct(F.col("p_us").alias("us"), F.col("value").alias("value")).alias("__r"),
-    )
-    u = l_tagged.unionByName(r_tagged)
-    wb = (
-        W.partitionBy("user_id")
-        .orderBy("__ts", "__is_left", F.asc_nulls_first("__r"))
-        .rowsBetween(W.unboundedPreceding, 0)
-    )
-    wf = (
-        W.partitionBy("user_id")
-        .orderBy("__ts", "__is_left", F.asc_nulls_first("__r"))
-        .rowsBetween(0, W.unboundedFollowing)
-    )
-    out = (
-        u.withColumn("__b", F.last("__r", ignorenulls=True).over(wb))
-        .withColumn("__f", F.first("__r", ignorenulls=True).over(wf))
-        .filter(F.col("__is_left") == 1)
-    )
+    out = _click_purchase_candidates(spark, sf_dir)
     us = F.unix_micros("__ts")
     d_back = us - F.col("__b.us")   # >= 0 when backward candidate exists
     d_fwd = F.col("__f.us") - us    # > 0 when forward candidate exists
@@ -709,21 +675,31 @@ GROUP BY p.event_id"""
 # ---------------------------------------------------------------------------
 
 
-def rel_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _order_timeline(spark: SparkSession, sf_dir: str, cols) -> DataFrame:
+    """(o_orderkey, o_custkey) plus the columns ``cols(w, wall)`` builds over
+    the per-customer order timeline: ``w`` orders by (o_orderdate,
+    o_orderkey), ``wall`` is its full partition frame.  Shared by the
+    window-function siblings."""
     o = load_table(spark, "orders", sf_dir).select(
         "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
     )
     w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
     wall = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.lag("o_totalprice").over(w).alias("prev_price"),
-        F.lead("o_totalprice").over(w).alias("next_price"),
-        F.dense_rank().over(w).alias("order_seq"),
-        F.ntile(4).over(w).alias("quartile"),
-        F.first("o_totalprice").over(wall).alias("first_price"),
-        F.last("o_totalprice").over(wall).alias("last_price"),
+    return o.select("o_orderkey", "o_custkey", *cols(w, wall))
+
+
+def rel_window_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _order_timeline(
+        spark,
+        sf_dir,
+        lambda w, wall: [
+            F.lag("o_totalprice").over(w).alias("prev_price"),
+            F.lead("o_totalprice").over(w).alias("next_price"),
+            F.dense_rank().over(w).alias("order_seq"),
+            F.ntile(4).over(w).alias("quartile"),
+            F.first("o_totalprice").over(wall).alias("first_price"),
+            F.last("o_totalprice").over(wall).alias("last_price"),
+        ],
     )
 
 
@@ -872,17 +848,14 @@ register("udf_udtf_chunks", udf_udtf_chunks, UDF_UDTF_CHUNKS_SQL)
 
 
 def rel_window_dist(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = load_table(spark, "orders", sf_dir).select(
-        "o_orderkey", "o_custkey", "o_orderdate", "o_totalprice"
-    )
-    w = W.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    wall = w.rowsBetween(W.unboundedPreceding, W.unboundedFollowing)
-    return o.select(
-        "o_orderkey",
-        "o_custkey",
-        F.percent_rank().over(w).alias("pct_rank"),
-        F.cume_dist().over(w).alias("cume"),
-        F.nth_value("o_totalprice", 3).over(wall).alias("third_price"),
+    return _order_timeline(
+        spark,
+        sf_dir,
+        lambda w, wall: [
+            F.percent_rank().over(w).alias("pct_rank"),
+            F.cume_dist().over(w).alias("cume"),
+            F.nth_value("o_totalprice", 3).over(wall).alias("third_price"),
+        ],
     )
 
 

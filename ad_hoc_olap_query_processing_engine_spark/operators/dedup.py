@@ -514,6 +514,26 @@ def lsh_bands(sh: DataFrame) -> DataFrame:
     return sig.select("doc_id", F.posexplode(band_keys).alias("band", "key"))
 
 
+def bucket_window_join(members: DataFrame) -> DataFrame:
+    """The sorted-neighbourhood LSH pairing rule: rank each (band, key)
+    bucket's members by doc_id and pair every member with the next
+    LSH_BUCKET_WINDOW ranks.  Returns the self-join with its sides aliased
+    ``a`` and ``b`` (b ranks after a); callers project the pair."""
+    from pyspark.sql import Window as W
+
+    rb = members.withColumn(
+        "rk", F.row_number().over(W.partitionBy("band", "key").orderBy("doc_id"))
+    )
+    a, b = rb.alias("a"), rb.alias("b")
+    return a.join(
+        b,
+        (F.col("a.band") == F.col("b.band"))
+        & (F.col("a.key") == F.col("b.key"))
+        & (F.col("b.rk") > F.col("a.rk"))
+        & (F.col("b.rk") <= F.col("a.rk") + LSH_BUCKET_WINDOW),
+    )
+
+
 def minhash_pairs(
     sh: DataFrame, big: bool = True, pins: Pins | None = None
 ) -> DataFrame:
@@ -533,22 +553,10 @@ def minhash_pairs(
     failure; at bench scale the same machinery was a 3-4× slowdown
     (round-11 profiling), which is exactly the size-adaptive plan choice a
     cluster optimizer makes from table stats."""
-    from pyspark.sql import Window as W
-
     bands = lsh_bands(sh)
     if not big:
-        rb = bands.withColumn(
-            "rk", F.row_number().over(W.partitionBy("band", "key").orderBy("doc_id"))
-        )
-        a, b = rb.alias("a"), rb.alias("b")
         cand = (
-            a.join(
-                b,
-                (F.col("a.band") == F.col("b.band"))
-                & (F.col("a.key") == F.col("b.key"))
-                & (F.col("b.rk") > F.col("a.rk"))
-                & (F.col("b.rk") <= F.col("a.rk") + LSH_BUCKET_WINDOW),
-            )
+            bucket_window_join(bands)
             .select(
                 F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b")
             )
@@ -589,8 +597,8 @@ def minhash_pairs(
     if pins is None:  # a direct caller keeps the persists unowned
         pins = Pins()
     mh = F.xxhash64(F.col("doc_id"))
-    # bands feeds TWO subtrees (the bucket-class aggregate and the rbands
-    # join) and sets feeds two more (rbands and the verify's representative
+    # bands feeds TWO subtrees (the bucket-class aggregate and the members
+    # join) and sets feeds two more (members and the verify's representative
     # build) — with differing projections above each use, Catalyst plans NO
     # ReusedExchange and the whole signature pipeline recomputes once per
     # consumer (round-11 profiling: the sketch ran 2-3× inside one query,
@@ -613,27 +621,15 @@ def minhash_pairs(
     # sets feeds the (lazy) verify tail, so it cannot unpersist here; the
     # caller releases it once the returned DataFrame is materialized
     sets = pins.persist(_set_fingerprints(sh), StorageLevel.DISK_ONLY)
-    rbands = (
-        bands.join(reps, ["band", "key"])
-        .join(_spillable(sets.select("doc_id", "__fp"), big), "doc_id")
-        .withColumn(
-            "rk",
-            F.row_number().over(W.partitionBy("band", "key").orderBy("doc_id")),
-        )
+    members = bands.join(reps, ["band", "key"]).join(
+        _spillable(sets.select("doc_id", "__fp"), big), "doc_id"
     )
-    a, b = rbands.alias("a"), rbands.alias("b")
     # the verify joins read keyed TWICE (distinct fingerprint pairs + the
     # verdict join back); materialize it eagerly so the window join runs
     # once.  DISK_ONLY persist + count (the round-12 fix to the ADVICE r11
     # leak: the caller releases it with ``pins``).
     keyed = pins.persist(
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("b.rk") > F.col("a.rk"))
-            & (F.col("b.rk") <= F.col("a.rk") + LSH_BUCKET_WINDOW),
-        )
+        bucket_window_join(members)
         .select(
             F.col("a.doc_id").alias("doc_a"),
             F.col("b.doc_id").alias("doc_b"),

@@ -28,6 +28,7 @@ from ..sources.catalog import load_table
 from .dedup import (
     _SHINGLES_SQL,
     _minhash_ctes,
+    bucket_window_join,
     cc_labels,
     shingle_postings,
 )
@@ -1353,23 +1354,8 @@ def _delta_pred():
 
 def _windowed_bucket_pairs(members: DataFrame) -> DataFrame:
     """Sorted-neighborhood windowed pairs PER BUCKET, keeping (band, key)
-    provenance (same pairing rule as dedup.minhash_pairs, which drops the
-    provenance via DISTINCT)."""
-    from pyspark.sql import Window as W
-
-    from .dedup import LSH_BUCKET_WINDOW
-
-    rb = members.withColumn(
-        "rk", F.row_number().over(W.partitionBy("band", "key").orderBy("doc_id"))
-    )
-    a, b = rb.alias("a"), rb.alias("b")
-    return a.join(
-        b,
-        (F.col("a.band") == F.col("b.band"))
-        & (F.col("a.key") == F.col("b.key"))
-        & (F.col("b.rk") > F.col("a.rk"))
-        & (F.col("b.rk") <= F.col("a.rk") + LSH_BUCKET_WINDOW),
-    ).select(
+    provenance (dedup.minhash_pairs drops it via DISTINCT)."""
+    return bucket_window_join(members).select(
         F.col("a.band").alias("band"),
         F.col("a.key").alias("key"),
         F.col("a.doc_id").alias("doc_a"),

@@ -51,11 +51,6 @@ def bitmap_blk_bit(key_col: str):
     return blk, bit
 
 
-def bitmap_bit_index(key_col: str):
-    """The in-word bit index of ``key_col`` (0..63, any int64 key)."""
-    return F.expr(f"CAST(({key_col} & 63) AS INT)")
-
-
 def bitmap_semi_join(fact: DataFrame, keys: DataFrame, fact_key: str, key_col: str) -> DataFrame:
     """Exact semi join of ``fact`` against the integer key set ``keys``,
     transported as a blocked bitmap (8 bytes per 64-key block); see

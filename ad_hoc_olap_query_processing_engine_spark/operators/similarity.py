@@ -152,6 +152,28 @@ def _exact_rerank(cand: DataFrame) -> DataFrame:
     )
 
 
+def _rerank_nearest(e: DataFrame, scored: DataFrame, dist: str, n: int) -> DataFrame:
+    """`_exact_rerank` of each query's ``n`` nearest candidates by the
+    approximate distance column ``dist`` of ``scored`` (query_id, vec_id,
+    dist; vec_id tiebreak), with both sides' embeddings joined back from
+    ``e``.  Shared by the quantized ANN siblings."""
+    w = W.partitionBy("query_id").orderBy(F.asc(dist), F.asc("vec_id"))
+    cand = (
+        scored.withColumn("__rn", F.row_number().over(w))
+        .filter(F.col("__rn") <= n)
+        .select("query_id", "vec_id")
+    )
+    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
+        F.col("vec_id").alias("__qid"), F.col("embedding").alias("q_emb")
+    )
+    pairs = (
+        cand.join(F.broadcast(queries), F.col("query_id") == F.col("__qid"))
+        .join(e, "vec_id")
+        .select("query_id", "q_emb", "vec_id", "embedding")
+    )
+    return _exact_rerank(pairs)
+
+
 _RERANK_SQL_TAIL = f"""\
 scored AS (
   SELECT c.query_id, c.vec_id,
@@ -1622,21 +1644,7 @@ def sim_sq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("__qdist", qdist)
         .select("query_id", "vec_id", "__qdist")
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("__qdist"), F.asc("vec_id"))
-    cand = (
-        scored.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= SQ_CANDIDATES)
-        .select("query_id", "vec_id")
-    )
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("__qid"), F.col("embedding").alias("q_emb")
-    )
-    pairs = (
-        cand.join(F.broadcast(queries), F.col("query_id") == F.col("__qid"))
-        .join(e, "vec_id")
-        .select("query_id", "q_emb", "vec_id", "embedding")
-    )
-    return _exact_rerank(pairs)
+    return _rerank_nearest(e, scored, "__qdist", SQ_CANDIDATES)
 
 
 SIM_SQ_ANN_SQL = f"""\
@@ -1803,37 +1811,33 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached("pq_codes", spark, sf_dir, build)
 
 
-def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "embeddings", sf_dir)
-    cb = pq_codebook(spark, sf_dir)
-    codes = pq_codes(spark, sf_dir)
+def _pq_adc(
+    qelems: DataFrame, qid: str | Column, keys: list[str], cb: DataFrame, codes: DataFrame
+) -> DataFrame:
+    """PQ asymmetric distance (query_id, vec_id, adist): every query element's
+    squared distance to each codeword of its subspace, grouped on ``qid``
+    (the query id column) and ``keys`` + k, then summed over each coded
+    vector's codewords (own vector excluded).  Shared by the PQ siblings."""
     qd = (
-        _pq_elems(e.filter(F.col("vec_id") < N_QUERIES))
-        .join(F.broadcast(cb.drop("m")), "d")
-        .groupBy(F.col("vec_id").alias("query_id"), "m", "k")
+        qelems.join(F.broadcast(cb.drop("m")), "d")
+        .groupBy(qid, *keys, "k")
         .agg(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias("qd"))
     )
-    adc = (
-        codes.join(F.broadcast(qd), ["m", "k"])
+    return (
+        codes.join(F.broadcast(qd), [*keys, "k"])
         .filter(F.col("vec_id") != F.col("query_id"))
         .groupBy("query_id", "vec_id")
         .agg(F.sum("qd").alias("adist"))
     )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= PQ_CANDIDATES)
-        .select("query_id", "vec_id")
-    )
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("__qid"), F.col("embedding").alias("q_emb")
-    )
-    pairs = (
-        cand.join(F.broadcast(queries), F.col("query_id") == F.col("__qid"))
-        .join(e, "vec_id")
-        .select("query_id", "q_emb", "vec_id", "embedding")
-    )
-    return _exact_rerank(pairs)
+
+
+def sim_pq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
+    e = load_table(spark, "embeddings", sf_dir)
+    cb = pq_codebook(spark, sf_dir)
+    codes = pq_codes(spark, sf_dir)
+    qelems = _pq_elems(e.filter(F.col("vec_id") < N_QUERIES))
+    adc = _pq_adc(qelems, F.col("vec_id").alias("query_id"), ["m"], cb, codes)
+    return _rerank_nearest(e, adc, "adist", PQ_CANDIDATES)
 
 
 # shared oracle CTEs: quantized elements -> deterministic one-Lloyd-step
@@ -2076,32 +2080,8 @@ def sim_ivfpq_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(F.broadcast(ccent), ["cell", "d"])
         .select("query_id", "cell", "d", "m", (F.col("v") - F.col("cc")).alias("v"))
     )
-    qd = (
-        qres.join(F.broadcast(cb.drop("m")), "d")
-        .groupBy("query_id", "cell", "m", "k")
-        .agg(F.sum((F.col("v") - F.col("c")) * (F.col("v") - F.col("c"))).alias("qd"))
-    )
-    adc = (
-        codes.join(F.broadcast(qd), ["cell", "m", "k"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .groupBy("query_id", "vec_id")
-        .agg(F.sum("qd").alias("adist"))
-    )
-    w = W.partitionBy("query_id").orderBy(F.asc("adist"), F.asc("vec_id"))
-    cand = (
-        adc.withColumn("__rn", F.row_number().over(w))
-        .filter(F.col("__rn") <= PQ_CANDIDATES)
-        .select("query_id", "vec_id")
-    )
-    queries = e.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("__qid"), F.col("embedding").alias("q_emb")
-    )
-    pairs = (
-        cand.join(F.broadcast(queries), F.col("query_id") == F.col("__qid"))
-        .join(e, "vec_id")
-        .select("query_id", "q_emb", "vec_id", "embedding")
-    )
-    return _exact_rerank(pairs)
+    adc = _pq_adc(qres, "query_id", ["cell", "m"], cb, codes)
+    return _rerank_nearest(e, adc, "adist", PQ_CANDIDATES)
 
 
 def _ivfpq_sql() -> str:
@@ -2232,19 +2212,26 @@ def _int_dot(a: Column, b: Column) -> Column:
     )
 
 
-def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    import numpy as np
-    import pandas as pd
-
+def _quantized_pairs(spark: SparkSession, sf_dir: str, *cols) -> DataFrame:
+    """(query_id, vec_id, *cols) over every (query, other corpus vector) pair
+    of quantized embeddings — ``iv`` on the corpus side, ``qiv`` on the
+    broadcast query side.  Shared by the quantized-dot siblings."""
     e = load_table(spark, "embeddings", sf_dir)
     corpus = e.select("vec_id", _quantize_vec(F.col("embedding")).alias("iv"))
     queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("iv").alias("qiv")
     )
-    scored = _spread(corpus).join(
+    return _spread(corpus).join(
         F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id", "vec_id", "iv", _int_dot(F.col("iv"), F.col("qiv")).alias("rel")
+    ).select("query_id", "vec_id", *cols)
+
+
+def sim_mmr_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
+    import numpy as np
+    import pandas as pd
+
+    scored = _quantized_pairs(
+        spark, sf_dir, "iv", _int_dot(F.col("iv"), F.col("qiv")).alias("rel")
     )
     w = W.partitionBy("query_id").orderBy(F.desc("rel"), F.asc("vec_id"))
     cand = scored.withColumn("__rn", F.row_number().over(w)).filter(F.col("__rn") <= MMR_M)
@@ -2360,16 +2347,9 @@ MATRYOSHKA_DIMS = 16
 
 
 def embed_matryoshka_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
-    e = load_table(spark, "embeddings", sf_dir)
-    corpus = e.select("vec_id", _quantize_vec(F.col("embedding")).alias("iv"))
-    queries = corpus.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), F.col("iv").alias("qiv")
-    )
-    scored = _spread(corpus).join(
-        F.broadcast(queries), F.col("vec_id") != F.col("query_id")
-    ).select(
-        "query_id",
-        "vec_id",
+    scored = _quantized_pairs(
+        spark,
+        sf_dir,
         _int_dot(F.col("iv"), F.col("qiv")).alias("rel_full"),
         _int_dot(
             F.slice(F.col("iv"), 1, MATRYOSHKA_DIMS),

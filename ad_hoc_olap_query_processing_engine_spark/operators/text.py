@@ -942,7 +942,10 @@ register("text_collocations", text_collocations, TEXT_COLLOCATIONS_SQL)
 LINE_TOKENS = 4
 
 
-def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _doc_lines(spark: SparkSession, sf_dir: str):
+    """(documents, n_lines column, exploded (doc_id, pos, line) frame): every
+    document split into LINE_TOKENS-token lines.  Shared by the line-dedup
+    siblings."""
     d = load_table(spark, "documents", sf_dir)
     toks = F.split(F.col("text"), " ")
     n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
@@ -950,23 +953,28 @@ def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sequence(F.lit(0), n_lines - 1),
         lambda i: F.array_join(F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " "),
     )
-    exploded = d.select("doc_id", F.posexplode(lines).alias("pos", "line"))
-    freq = exploded.groupBy("line").agg(F.countDistinct("doc_id").alias("__df"))
-    kept = (
-        exploded.join(freq, "line")
-        .filter(F.col("__df") == 1)
-        .groupBy("doc_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_kept"),
-            F.array_join(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                    lambda s: s.getField("line"),
-                ),
-                " ",
-            ).alias("__clean"),
-        )
+    return d, n_lines, d.select("doc_id", F.posexplode(lines).alias("pos", "line"))
+
+
+def _kept_lines(rows: DataFrame) -> DataFrame:
+    """Per doc_id: how many (pos, line) rows were kept (``n_kept``) and the
+    kept lines re-joined in position order (``__clean``)."""
+    return rows.groupBy("doc_id").agg(
+        F.count(F.lit(1)).alias("n_kept"),
+        F.array_join(
+            F.transform(
+                F.array_sort(F.collect_list(F.struct("pos", "line"))),
+                lambda s: s.getField("line"),
+            ),
+            " ",
+        ).alias("__clean"),
     )
+
+
+def text_line_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    d, n_lines, exploded = _doc_lines(spark, sf_dir)
+    freq = exploded.groupBy("line").agg(F.countDistinct("doc_id").alias("__df"))
+    kept = _kept_lines(exploded.join(freq, "line").filter(F.col("__df") == 1))
     return (
         d.select("doc_id", n_lines.alias("n_lines"))
         .join(kept, "doc_id", "left")
@@ -1346,25 +1354,9 @@ register("text_bpe_encode", text_bpe_encode, _bpe_encode_sql())
 
 
 def text_selfline_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = load_table(spark, "documents", sf_dir)
-    toks = F.split(F.col("text"), " ")
-    n_lines = F.ceil(F.size(toks) / F.lit(LINE_TOKENS)).cast("int")
-    lines = F.transform(
-        F.sequence(F.lit(0), n_lines - 1),
-        lambda i: F.array_join(F.slice(toks, i * LINE_TOKENS + 1, LINE_TOKENS), " "),
-    )
-    exploded = d.select("doc_id", F.posexplode(lines).alias("pos", "line"))
+    d, n_lines, exploded = _doc_lines(spark, sf_dir)
     firsts = exploded.groupBy("doc_id", "line").agg(F.min("pos").alias("pos"))
-    kept = firsts.groupBy("doc_id").agg(
-        F.count(F.lit(1)).alias("n_kept"),
-        F.array_join(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "line"))),
-                lambda s: s.getField("line"),
-            ),
-            " ",
-        ).alias("__clean"),
-    )
+    kept = _kept_lines(firsts)
     return (
         d.select("doc_id", n_lines.alias("n_lines"))
         .join(kept, "doc_id")

@@ -111,7 +111,13 @@ register("func_timebucket", func_timebucket, FUNC_TIMEBUCKET_SQL)
 # ---------------------------------------------------------------------------
 
 
-def rel_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+def _per_user_funnel(
+    spark: SparkSession, sf_dir: str, click_within_us=None, purchase_within_us=None
+) -> DataFrame:
+    """(user_id, t_view, t_click, t_purch): each user's first view, first
+    click after it and first purchase after that click, in epoch micros; a
+    step with a deadline must also land within it of the previous step.
+    Shared by the funnel siblings."""
     from pyspark.sql import Window as W
 
     e = load_table(spark, "events", sf_dir).select(
@@ -120,28 +126,25 @@ def rel_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = W.partitionBy("user_id")
     t_view = F.min(F.when(F.col("event_type") == "view", F.col("us"))).over(w)
     e = e.withColumn("__t_view", t_view)
-    t_click = F.min(
-        F.when(
-            (F.col("event_type") == "click") & (F.col("us") > F.col("__t_view")),
-            F.col("us"),
-        )
-    ).over(w)
-    e = e.withColumn("__t_click", t_click)
-    t_purch = F.min(
-        F.when(
-            (F.col("event_type") == "purchase") & (F.col("us") > F.col("__t_click")),
-            F.col("us"),
-        )
-    ).over(w)
-    e = e.withColumn("__t_purch", t_purch)
+    for step, kind, prev, within in (
+        ("__t_click", "click", "__t_view", click_within_us),
+        ("__t_purch", "purchase", "__t_click", purchase_within_us),
+    ):
+        cond = (F.col("event_type") == kind) & (F.col("us") > F.col(prev))
+        if within is not None:
+            cond = cond & (F.col("us") <= F.col(prev) + within)
+        e = e.withColumn(step, F.min(F.when(cond, F.col("us"))).over(w))
     # min over a per-user-constant window column == that constant (min
     # instead of first: order-independent by construction)
-    per_user = e.groupBy("user_id").agg(
+    return e.groupBy("user_id").agg(
         F.min("__t_view").alias("t_view"),
         F.min("__t_click").alias("t_click"),
         F.min("__t_purch").alias("t_purch"),
     )
-    return per_user.agg(
+
+
+def rel_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
+    return _per_user_funnel(spark, sf_dir).agg(
         F.count(F.lit(1)).alias("n_users"),
         F.count("t_view").alias("n_viewed"),
         F.count("t_click").alias("n_clicked_after_view"),
@@ -801,37 +804,7 @@ FUNNEL_PURCHASE_US = 86_400_000_000     # 24 h after qualifying click
 
 
 def rel_funnel_window(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from pyspark.sql import Window as W
-
-    e = load_table(spark, "events", sf_dir).select(
-        "user_id", "event_type", F.unix_micros("ts").alias("us")
-    )
-    w = W.partitionBy("user_id")
-    t_view = F.min(F.when(F.col("event_type") == "view", F.col("us"))).over(w)
-    e = e.withColumn("__t_view", t_view)
-    t_click = F.min(
-        F.when(
-            (F.col("event_type") == "click")
-            & (F.col("us") > F.col("__t_view"))
-            & (F.col("us") <= F.col("__t_view") + FUNNEL_CLICK_US),
-            F.col("us"),
-        )
-    ).over(w)
-    e = e.withColumn("__t_click", t_click)
-    t_purch = F.min(
-        F.when(
-            (F.col("event_type") == "purchase")
-            & (F.col("us") > F.col("__t_click"))
-            & (F.col("us") <= F.col("__t_click") + FUNNEL_PURCHASE_US),
-            F.col("us"),
-        )
-    ).over(w)
-    e = e.withColumn("__t_purch", t_purch)
-    per_user = e.groupBy("user_id").agg(
-        F.min("__t_view").alias("t_view"),
-        F.min("__t_click").alias("t_click"),
-        F.min("__t_purch").alias("t_purch"),
-    )
+    per_user = _per_user_funnel(spark, sf_dir, FUNNEL_CLICK_US, FUNNEL_PURCHASE_US)
     return per_user.agg(
         F.count(F.lit(1)).alias("n_users"),
         F.count("t_view").alias("n_viewed"),

@@ -275,18 +275,50 @@ def _sigma(conds: list[Cond]) -> Column | None:
     return _and_all([_tuple_cond(c) for c in conds]) if conds else None
 
 
+def _join_back(
+    groups: DataFrame, res: DataFrame, keys: list[str], tag: str = "__r_"
+) -> DataFrame:
+    """Left-join per-key results ``res`` back onto every group row, null-safe
+    on the keys so NULL-keyed groups receive theirs (GROUP BY and window
+    partitions treat NULL as a value; a plain equi-join would drop it).
+    ``res``'s key columns are renamed ``<tag><key>`` for the join and
+    dropped after it."""
+    for k in keys:
+        res = res.withColumnRenamed(k, f"{tag}{k}")
+    cond = _and_all([F.col(k).eqNullSafe(F.col(f"{tag}{k}")) for k in keys])
+    return groups.join(res, cond, "left").drop(*[f"{tag}{k}" for k in keys])
+
+
 def _reagg_join(groups: DataFrame, keys: list[str], aggs: list[Column]) -> DataFrame:
     """groupBy(keys) over the group table and join the totals back onto every
-    row — the unordered-window replacement. Null-safe on the keys (window
-    partitions treat NULL as a value; a plain equi-join would drop it).
-    Empty key set = global totals (one row, cross join)."""
-    tot = groups.groupBy(*keys).agg(*aggs) if keys else groups.groupBy().agg(*aggs)
-    for k in keys:
-        tot = tot.withColumnRenamed(k, f"__k_{k}")
+    row — the unordered-window replacement. Empty key set = global totals
+    (one row, cross join)."""
     if not keys:
-        return groups.crossJoin(F.broadcast(tot))
-    cond = _and_all([F.col(k).eqNullSafe(F.col(f"__k_{k}")) for k in keys])
-    return groups.join(tot, cond, "left").drop(*[f"__k_{k}" for k in keys])
+        return groups.crossJoin(F.broadcast(groups.groupBy().agg(*aggs)))
+    return _join_back(groups, groups.groupBy(*keys).agg(*aggs), keys, "__k_")
+
+
+def _finish(fn: str, cnt: Column, tot: Column) -> Column:
+    """A count/sum/avg GV from its summed partial count ``cnt`` and sum
+    ``tot``: count 0 and sum/avg NULL over no tuples; avg is tuple-weighted
+    (Σsums / Σcounts), never an avg of avgs."""
+    if fn == "count":
+        return F.coalesce(cnt, F.lit(0))
+    if fn == "sum":
+        return F.when(cnt > 0, tot)
+    return F.when(cnt > 0, tot / cnt)
+
+
+def _memb(left: Column, op: str, right: Column) -> Column:
+    """The membership rule: (in)equality is null-safe, like the oracle's IS
+    [NOT] DISTINCT FROM (GROUP BY forms a NULL-key group in both engines; a
+    tuple with a NULL key belongs to that group, and to every other group's
+    complement); θ comparisons are plain SQL (NULL → excluded)."""
+    if op == "==":
+        return left.eqNullSafe(right)
+    if op == "!=":
+        return ~left.eqNullSafe(right)
+    return _PYOPS[op](left, right)
 
 
 def _agg_expr(fn: str, src: str, guard: Column | None, alias: str) -> Column:
@@ -307,18 +339,6 @@ def _rowcond_operand(o: Operand, g0_names: frozenset[str] | set[str]) -> Column:
     if o.kind == "mf" and o.name in g0_names:
         return F.col(f"__g0w_{o.name}")
     return F.col(o.name)
-
-
-def _rowcond_col(c: Cond, g0_names: frozenset[str] | set[str]) -> Column:
-    left = _rowcond_operand(c.left, g0_names)
-    right = _rowcond_operand(c.right, g0_names)
-    # membership (in)equality is null-safe, like the oracle's
-    # IS [NOT] DISTINCT FROM; θ comparisons are plain SQL (NULL → excluded)
-    if c.op == "==":
-        return left.eqNullSafe(right)
-    if c.op == "!=":
-        return ~left.eqNullSafe(right)
-    return _PYOPS[c.op](left, right)
 
 
 # ---------------------------------------------------------------------------
@@ -380,7 +400,12 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
             aggs.append(_agg_expr(gv.agg.fn, gv.agg.src, guard, gv.agg.name))
         elif p.strategy == "fact_window":
             parts = ([] if guard is None else [guard]) + [
-                _rowcond_col(c, g0_names) for c in p.rowconds
+                _memb(
+                    _rowcond_operand(c.left, g0_names),
+                    c.op,
+                    _rowcond_operand(c.right, g0_names),
+                )
+                for c in p.rowconds
             ]
             aggs.append(_agg_expr(gv.agg.fn, gv.agg.src, _and_all(parts), gv.agg.name))
         elif p.strategy in ("window", "group_join"):
@@ -469,13 +494,7 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
                 cnt = cnt - self_cnt
                 if fn != "count":
                     tot = F.coalesce(tot, F.lit(0)) - self_sum
-        if fn == "count":
-            expr = F.coalesce(cnt, F.lit(0))
-        elif fn == "sum":
-            expr = F.when(cnt > 0, tot)
-        else:  # avg — tuple-weighted: Σsums / Σcounts
-            expr = F.when(cnt > 0, tot / cnt)
-        groups = groups.withColumn(gv.agg.name, expr)
+        groups = groups.withColumn(gv.agg.name, _finish(fn, cnt, tot))
 
     # ---- GROUP_JOIN GVs: θ-self-join of the group table on the GV's simple
     # conditions, re-aggregating the scan-0 partials — still zero extra
@@ -532,14 +551,14 @@ def _group_join_gv(groups: DataFrame, v: list[str], p: _GVPlan) -> DataFrame:
         *[F.col(a).alias(f"__o_{a}") for a in o_attrs],
         *[F.col(c).alias(f"__o_{c}") for c in pcols],
     )
-    conds = [F.col(f"__o_{a}").eqNullSafe(F.col(a)) for a in p.eq_attrs]
-    conds += [_PYOPS[op](F.col(f"__o_{a}"), F.col(a)) for a, op in p.thetas]
-    conds += [~F.col(f"__o_{a}").eqNullSafe(F.col(a)) for a in p.anti_attrs]
+    attr_ops = (
+        [(a, "==") for a in p.eq_attrs] + p.thetas + [(a, "!=") for a in p.anti_attrs]
+    )
+    conds = [_memb(F.col(f"__o_{a}"), op, F.col(a)) for a, op in attr_ops]
 
     # generic group-level conditions: tuple-side operands stand in for the
     # other group (o), MF operands are the anchor's fields (grouping attrs or
-    # group-0 aggregates); membership (in)equality is null-safe like the
-    # oracle's IS [NOT] DISTINCT FROM.
+    # group-0 aggregates).
     def _gside(op_: Operand) -> Column:
         if op_.kind == "col":
             return F.col(f"__o_{op_.name}")
@@ -547,14 +566,7 @@ def _group_join_gv(groups: DataFrame, v: list[str], p: _GVPlan) -> DataFrame:
             return F.col(op_.name)
         return F.lit(op_.value)
 
-    for c in p.gconds:
-        left, right = _gside(c.left), _gside(c.right)
-        if c.op == "==":
-            conds.append(left.eqNullSafe(right))
-        elif c.op == "!=":
-            conds.append(~left.eqNullSafe(right))
-        else:
-            conds.append(_PYOPS[c.op](left, right))
+    conds += [_memb(_gside(c.left), c.op, _gside(c.right)) for c in p.gconds]
     # anchor side carries its grouping key plus any group-0 aggregates the
     # group-level conditions reference
     anchor_extra = sorted(
@@ -576,21 +588,11 @@ def _group_join_gv(groups: DataFrame, v: list[str], p: _GVPlan) -> DataFrame:
         tot_aggs = [F.sum(F.col(f"__o___pcnt_{i}")).alias(f"__tc_{i}")]
         if fn != "count":
             tot_aggs.append(F.sum(F.col(f"__o___psum_{i}")).alias(f"__ts_{i}"))
-    res = joined.groupBy(*v).agg(*tot_aggs)
-    for a in v:
-        res = res.withColumnRenamed(a, f"__r_{a}")
-    back = _and_all([F.col(a).eqNullSafe(F.col(f"__r_{a}")) for a in v])
-    out = groups.join(res, back, how="left").drop(*[f"__r_{a}" for a in v])
+    out = _join_back(groups, joined.groupBy(*v).agg(*tot_aggs), v)
     if fn in ("min", "max"):
         expr = F.col(f"__tm_{i}")
-    elif fn == "count":
-        expr = F.coalesce(F.col(f"__tc_{i}"), F.lit(0))
-    elif fn == "sum":
-        expr = F.when(F.col(f"__tc_{i}") > 0, F.col(f"__ts_{i}"))
-    else:  # avg — tuple-weighted: Σsums / Σcounts
-        expr = F.when(
-            F.col(f"__tc_{i}") > 0, F.col(f"__ts_{i}") / F.col(f"__tc_{i}")
-        )
+    else:
+        expr = _finish(fn, F.col(f"__tc_{i}"), F.col(f"__ts_{i}"))
     return out.withColumn(gv.agg.name, expr).drop(f"__tm_{i}", f"__tc_{i}", f"__ts_{i}")
 
 
@@ -613,18 +615,9 @@ def _join_agg_stage(
             return F.col(f"g.{o.name}")
         return F.lit(o.value)
 
-    # MF membership (in)equality is NULL-safe (GROUP BY forms a NULL-key
-    # group in both engines; a tuple with a NULL key belongs to that group,
-    # and to every other group's complement) — σ comparisons keep plain SQL
-    # semantics.
-    def _memb(c: Cond) -> Column:
-        if c.op == "==":
-            return side(c.left).eqNullSafe(side(c.right))
-        if c.op == "!=":
-            return ~side(c.left).eqNullSafe(side(c.right))
-        return _PYOPS[c.op](side(c.left), side(c.right))
-
-    conds = [_memb(c) for c in gv.mf_conds]
+    # MF membership follows the membership rule; σ comparisons keep plain
+    # SQL semantics.
+    conds = [_memb(side(c.left), c.op, side(c.right)) for c in gv.mf_conds]
     conds += [
         _PYOPS[c.op](side(c.left), side(c.right)) for c in gv.tuple_conds
     ]
@@ -637,11 +630,7 @@ def _join_agg_stage(
     guard = None  # tuple conds already applied in the join condition
     agg_col = _agg_expr(gv.agg.fn, f"s.{gv.agg.src}", guard, gv.agg.name)
     res = joined.groupBy(*[F.col(f"g.{a}").alias(a) for a in v]).agg(agg_col)
-    # null-safe join-back so NULL-keyed groups receive their aggregate
-    for a in v:
-        res = res.withColumnRenamed(a, f"__r_{a}")
-    back = _and_all([F.col(a).eqNullSafe(F.col(f"__r_{a}")) for a in v])
-    out = acc.join(res, back, how="left").drop(*[f"__r_{a}" for a in v])
+    out = _join_back(acc, res, v)
     if gv.agg.fn == "count":
         out = out.withColumn(gv.agg.name, F.coalesce(F.col(gv.agg.name), F.lit(0)))
     return out

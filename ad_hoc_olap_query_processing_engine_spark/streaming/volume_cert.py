@@ -145,6 +145,17 @@ def _run_to_completion(agg: DataFrame, spark: SparkSession, mode: str, name: str
     return spark.table(name), progress
 
 
+def _progress_counters(progress: list) -> tuple[int, int, int]:
+    """(input rows, rows dropped by the watermark, peak state rows) summed
+    over a drained query's progress reports."""
+    state_ops = [so for p in progress for so in p.get("stateOperators", [])]
+    return (
+        sum(int(p["numInputRows"]) for p in progress),
+        sum(int(so.get("numRowsDroppedByWatermark", 0)) for so in state_ops),
+        max((int(so.get("numRowsTotal", 0)) for so in state_ops), default=0),
+    )
+
+
 def session_volume_cert(spark: SparkSession, data_dir: str, gen: dict) -> dict:
     """Append-mode session windows under watermark pressure; exact parity."""
     ev = _read_stream(spark, data_dir).withWatermark("ts", WATERMARK)
@@ -159,17 +170,7 @@ def session_volume_cert(spark: SparkSession, data_dir: str, gen: dict) -> dict:
         "n_events",
     ).cache()
 
-    n_input = sum(int(p["numInputRows"]) for p in progress)
-    dropped = sum(
-        int(so.get("numRowsDroppedByWatermark", 0))
-        for p in progress
-        for so in p.get("stateOperators", [])
-    )
-    peak_state = max(
-        (int(so.get("numRowsTotal", 0)) for p in progress
-         for so in p.get("stateOperators", [])),
-        default=0,
-    )
+    n_input, dropped, peak_state = _progress_counters(progress)
 
     # exact parity: batch session windows over the on-time (real-user) rows
     expected = (
@@ -396,17 +397,7 @@ def join_volume_cert(
     out, progress = _run_to_completion(_join_select(j), spark, "append", "vol_join")
     emitted = out.filter(F.col("imp_id") >= 0).cache()
 
-    n_input = sum(int(p["numInputRows"]) for p in progress)
-    dropped = sum(
-        int(so.get("numRowsDroppedByWatermark", 0))
-        for p in progress
-        for so in p.get("stateOperators", [])
-    )
-    peak_state = max(
-        (int(so.get("numRowsTotal", 0)) for p in progress
-         for so in p.get("stateOperators", [])),
-        default=0,
-    )
+    n_input, dropped, peak_state = _progress_counters(progress)
 
     # exact parity: batch left-outer join over the ON-TIME rows (even
     # imp_ids are the only on-time clicks, by construction)

@@ -408,10 +408,11 @@ register("stream_dedup", stream_dedup, STREAM_DEDUP_SQL)
 # ---------------------------------------------------------------------------
 
 
-def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Stream-stream inner join: for each purchase, the same user's clicks
-    within the following hour. Both sides are watermarked so Spark can bound
-    the join state (purchases buffered ≤ 1h past the click watermark)."""
+def _purchase_click_join(spark: SparkSession, sf_dir: str, how: str) -> DataFrame:
+    """Each purchase joined (``how``) to the same user's clicks within the
+    following hour, drained as (user_id, purchase_us, click_us).  Both sides
+    are watermarked so Spark can bound the join state (purchases buffered
+    ≤ 1h past the click watermark).  Shared by the stream-join siblings."""
     purchases = (
         _events_stream(spark, sf_dir)
         .filter(F.col("event_type") == "purchase")
@@ -429,9 +430,9 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("user_id") == F.col("c_user"))
         & (F.col("c_ts") >= F.col("p_ts"))
         & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "inner",
+        how,
     )
-    out = _drain(
+    return _drain(
         joined.select(
             "user_id",
             F.unix_micros("p_ts").alias("purchase_us"),
@@ -440,7 +441,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         spark,
         "append",
     )
-    return out
+
+
+def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Stream-stream inner join: for each purchase, the same user's clicks
+    within the following hour."""
+    return _purchase_click_join(spark, sf_dir, "inner")
 
 
 STREAM_STREAM_JOIN_SQL = """\
@@ -475,34 +481,7 @@ register("stream_stream_join", stream_stream_join, STREAM_STREAM_JOIN_SQL)
 
 
 def stream_stream_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
-    purchases = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "purchase")
-        .select("user_id", F.col("ts").alias("p_ts"))
-        .withWatermark("p_ts", "1 hour")
-    )
-    clicks = (
-        _events_stream(spark, sf_dir)
-        .filter(F.col("event_type") == "click")
-        .select(F.col("user_id").alias("c_user"), F.col("ts").alias("c_ts"))
-        .withWatermark("c_ts", "1 hour")
-    )
-    joined = purchases.join(
-        clicks,
-        (F.col("user_id") == F.col("c_user"))
-        & (F.col("c_ts") >= F.col("p_ts"))
-        & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
-        "left_outer",
-    )
-    return _drain(
-        joined.select(
-            "user_id",
-            F.unix_micros("p_ts").alias("purchase_us"),
-            F.unix_micros("c_ts").alias("click_us"),
-        ),
-        spark,
-        "append",
-    )
+    return _purchase_click_join(spark, sf_dir, "left_outer")
 
 
 STREAM_STREAM_OUTER_SQL = """\

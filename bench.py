@@ -264,8 +264,12 @@ def main() -> None:
     while len(line) >= 1900 and top_n > 0:  # never exceed the driver's tail
         top_n -= 5
         line = _line(top_n)
-    print(line)
-    spark.stop()
+    # the summary line goes out last: shutdown traces (e.g. StateStore
+    # maintenance) printed by spark.stop() must not push it out of the tail
+    try:
+        spark.stop()
+    finally:
+        print(line, flush=True)
 
 
 if __name__ == "__main__":

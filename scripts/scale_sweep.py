@@ -33,8 +33,10 @@ import sys
 import threading
 import time
 
-sys.path.insert(0, "/root/repo")
-os.environ.setdefault("CROSSCHECK_SF_DIR", "/root/repo/.scaledata/sf1")
+# this checkout's root, so a copy of the repo imports its own package
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
+os.environ.setdefault("CROSSCHECK_SF_DIR", os.path.join(ROOT, ".scaledata", "sf1"))
 
 import duckdb
 import pandas as pd
@@ -496,7 +498,7 @@ def main() -> None:
         print(f"family warmup: {warmup_sec}", flush=True)
     con = duckdb.connect()
     con.sql(f"SET memory_limit = '{os.environ.get('SCALE_ORACLE_MEM', '24GB')}'")
-    con.sql("SET temp_directory = '/root/repo/.scaledata/duck_tmp'")
+    con.sql(f"SET temp_directory = '{os.path.join(ROOT, '.scaledata', 'duck_tmp')}'")
     con.sql(f"SET max_temp_directory_size = '{os.environ.get('SCALE_ORACLE_TEMP', '40GB')}'")
     if not spark_only:
         # spark-only probes never query the oracle connection; skipping the
@@ -621,7 +623,7 @@ def main() -> None:
     # SCALE_OUT overrides the evidence file (e.g. the sf10 exact tier writes
     # SCALE_sf10_exact.json instead of merging sf10 rows into the sf1 file)
     out_path = os.environ.get("SCALE_OUT") or (
-        "/root/repo/SCALE_sf1_full.json" if spark_only else "/root/repo/SCALE_sf1.json"
+        os.path.join(ROOT, "SCALE_sf1_full.json" if spark_only else "SCALE_sf1.json")
     )
     # a targeted rerun (explicit names) MERGES into the existing sweep file
     # so one fixed query doesn't wipe the full-set evidence — including any
