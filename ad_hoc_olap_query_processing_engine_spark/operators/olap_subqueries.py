@@ -39,6 +39,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..session import scoped_conf
 from ..sources.catalog import load_table
 from .registry import register
 from .relational import _dec, _dsum
@@ -337,8 +338,8 @@ HIER_TOP_NODES = 64
 
 def _run_recursive(spark: SparkSession, sql: str) -> DataFrame:
     """Run a recursive-CTE query under a raised cteRecursionRowLimit,
-    RESTORING the session default afterwards (the save/restore posture of
-    io.overwrite_partitions).  The walks here emit |parts| × log₂(max key)
+    RESTORING the session default afterwards (``session.scoped_conf``).
+    The walks here emit |parts| × log₂(max key)
     rows — ~3.6e6 at sf1, over Spark's default limit of 1e6 (found by the
     sf1 sweep: RECURSION_ROW_LIMIT_EXCEEDED).  They are DEPTH-bounded by
     construction (node halves every level: ≤ 64 levels for any int64 key,
@@ -349,16 +350,8 @@ def _run_recursive(spark: SparkSession, sql: str) -> DataFrame:
     (≤ 64 rows) is eagerly localCheckpoint-ed inside the raised window so
     the returned DataFrame no longer depends on the conf and a later query
     in the same session keeps the default recursion safety rail."""
-    key = "spark.sql.cteRecursionRowLimit"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, str(2**31 - 1))
-    try:
+    with scoped_conf(spark, {"spark.sql.cteRecursionRowLimit": str(2**31 - 1)}):
         return spark.sql(sql).localCheckpoint(eager=True)
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
 
 
 def rel_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:

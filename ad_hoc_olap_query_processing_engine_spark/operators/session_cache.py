@@ -19,8 +19,7 @@ Lifecycle rules (the leaks a long-lived embedding host would otherwise hit):
   ``localCheckpoint`` blocks live on the checkpointed RDD itself and bypass
   it — so eviction also unpersists the underlying RDD of every LogicalRDD
   leaf in the plan (which is exactly where localCheckpoint /
-  ``iterutil.truncated_checkpoint`` park their blocks). Builders with
-  bespoke state can still attach an explicit ``release`` callback;
+  ``iterutil.truncated_checkpoint`` park their blocks);
 - builds are serialized under a PER-ARTIFACT lock so concurrent first calls
   cannot double-build and leak the loser's persisted blocks, while builds of
   DIFFERENT artifacts may proceed concurrently (the bench warmup overlaps
@@ -35,8 +34,8 @@ from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession
 
-# name -> {(applicationId, sf_dir): (df, release_callback | None)}
-_CACHES: dict[str, dict[tuple[str, str], tuple[DataFrame, Callable[[], None] | None]]] = {}
+# name -> {(applicationId, sf_dir): df}
+_CACHES: dict[str, dict[tuple[str, str], DataFrame]] = {}
 _LOCK = threading.RLock()
 
 # (name, applicationId, sf_dir) -> build lock: serializes the two racers of
@@ -91,36 +90,22 @@ def release_blocks(df: DataFrame) -> None:
         pass
 
 
-def _drop(entry: tuple[DataFrame, Callable[[], None] | None]) -> None:
-    df, release = entry
-    if release is not None:
-        try:
-            release()
-        except Exception:
-            pass
-    release_blocks(df)
-
-
 def session_cached(
     name: str,
     spark: SparkSession,
     sf_dir: str,
     build: Callable[[], DataFrame],
-    release: Callable[[], None] | None = None,
 ) -> DataFrame:
     """Get-or-build the named artifact for (this session, this sf_dir).
 
     ``build`` should return an already-persisted (or checkpointed)
-    DataFrame; it runs at most once per live session per sf_dir.
-    ``release``, if given, runs on eviction BEFORE the generic
-    checkpoint-aware block release (for builders holding side state the
-    plan walk cannot see)."""
+    DataFrame; it runs at most once per live session per sf_dir."""
     app = spark.sparkContext.applicationId
     key = (app, sf_dir)
     with _LOCK:
         cache = _CACHES.setdefault(name, {})
         if key in cache:
-            return cache[key][0]
+            return cache[key]
         build_lock = _BUILD_LOCKS.setdefault((name, app, sf_dir), threading.RLock())
     # build OUTSIDE the module lock (Spark jobs run here — possibly many
     # seconds); the per-artifact lock stops double-builds of the same entry.
@@ -129,21 +114,21 @@ def session_cached(
     with build_lock:
         with _LOCK:
             if key in cache:
-                return cache[key][0]
+                return cache[key]
         df = build()
         with _LOCK:
             if key in cache:  # lost a race the build lock should prevent;
-                _drop((df, release))  # release the duplicate, keep the first
-                return cache[key][0]
+                release_blocks(df)  # release the duplicate, keep the first
+                return cache[key]
             # dead-session entries: blocks are already gone, just drop refs
             for stale in [k for k in cache if k[0] != app]:
                 cache.pop(stale)
-            cache[key] = (df, release)
+            cache[key] = df
             # live-session LRU cap: release the oldest surplus entries
             while len(cache) > MAX_SF_DIRS_PER_NAME:
                 oldest = next(iter(cache))
-                _drop(cache.pop(oldest))
-            return cache[key][0]
+                release_blocks(cache.pop(oldest))
+            return df
 
 
 def invalidate(name: str | None = None) -> None:
@@ -151,5 +136,5 @@ def invalidate(name: str | None = None) -> None:
     with _LOCK:
         names = [name] if name is not None else list(_CACHES)
         for n in names:
-            for entry in _CACHES.pop(n, {}).values():
-                _drop(entry)
+            for df in _CACHES.pop(n, {}).values():
+                release_blocks(df)

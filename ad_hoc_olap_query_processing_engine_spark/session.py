@@ -11,6 +11,8 @@ matches the DuckDB oracle.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterator
+from contextlib import contextmanager
 
 from pyspark.sql import SparkSession
 
@@ -61,3 +63,22 @@ def get_spark(
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
+
+
+@contextmanager
+def scoped_conf(spark: SparkSession, overrides: dict[str, str]) -> Iterator[None]:
+    """Set session confs for the duration of the block.  On exit, normal or
+    raised, each key gets its prior value back, or is unset if it had none,
+    so the session default (vanilla driver sessions included) is never
+    mutated."""
+    prior = {k: spark.conf.get(k, None) for k in overrides}
+    try:
+        for k, v in overrides.items():
+            spark.conf.set(k, v)
+        yield
+    finally:
+        for k, v in prior.items():
+            if v is None:
+                spark.conf.unset(k)
+            else:
+                spark.conf.set(k, v)

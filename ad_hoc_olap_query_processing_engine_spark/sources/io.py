@@ -13,6 +13,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
+from ..session import scoped_conf
+
 FORMATS = ("parquet", "orc", "csv", "json")
 
 
@@ -127,15 +129,5 @@ def overwrite_partitions(
     is never mutated.  At 100 TB this is how late-arriving corrections land:
     recompute one partition's rows, rewrite exactly that directory.
     """
-    conf = "spark.sql.sources.partitionOverwriteMode"
-    old = spark.conf.get(conf, "STATIC")
-    spark.conf.set(conf, "dynamic")
-    try:
-        (
-            df.write.mode("overwrite")
-            .format(fmt)
-            .partitionBy(*partition_by)
-            .save(path)
-        )
-    finally:
-        spark.conf.set(conf, old)
+    with scoped_conf(spark, {"spark.sql.sources.partitionOverwriteMode": "dynamic"}):
+        df.write.mode("overwrite").format(fmt).partitionBy(*partition_by).save(path)

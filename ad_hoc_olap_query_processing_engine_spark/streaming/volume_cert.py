@@ -31,6 +31,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .windows import drain, file_stream
+
 BASE_EPOCH = 1_704_067_200  # 2024-01-01 00:00:00 UTC
 FILE_SPAN_S = 7_200  # each file covers 2 h of event time
 SESSION_GAP = "30 minutes"
@@ -101,48 +103,7 @@ def generate_stream_files(
 
 
 def _read_stream(spark: SparkSession, data_dir: str) -> DataFrame:
-    schema = spark.read.parquet(data_dir).schema
-    return (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")  # one file per micro-batch: the
-        .parquet(data_dir)  # rate throttle that makes the watermark ADVANCE
-    )
-
-
-def _run_to_completion(agg: DataFrame, spark: SparkSession, mode: str, name: str):
-    """Start → drain → stop; returns (result_df, progress_list).
-
-    ``q.recentProgress`` is a RING buffer capped at
-    spark.sql.streaming.numRecentProgressUpdates (default 100): with one
-    file per micro-batch, a run above ~98 files would silently drop the
-    earliest batches' progress and the input-row conservation assertion
-    would fail spuriously.  Raise the cap well above any cert's batch
-    count so the accounting sums EVERY micro-batch."""
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    prev_prog = spark.conf.get(
-        "spark.sql.streaming.numRecentProgressUpdates", "100"
-    )
-    spark.conf.set("spark.sql.shuffle.partitions", "4")
-    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates", "10000")
-    # ONE try/finally owns both conf restores (round-11 advice #3): with the
-    # progress-retention restore only on the post-start path, a start()
-    # failure leaked numRecentProgressUpdates=10000 for the session's life.
-    # The retention conf is consulted on EVERY progress update, not captured
-    # at start, so it is restored only once the query has stopped.
-    q = None
-    try:
-        q = agg.writeStream.outputMode(mode).format("memory").queryName(name).start()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        q.processAllAvailable()
-        progress = [p for p in q.recentProgress if p is not None]
-    finally:
-        if q is not None:
-            q.stop()
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-        spark.conf.set(
-            "spark.sql.streaming.numRecentProgressUpdates", prev_prog
-        )
-    return spark.table(name), progress
+    return file_stream(spark, data_dir, spark.read.parquet(data_dir).schema)
 
 
 def _progress_counters(progress: list) -> tuple[int, int, int]:
@@ -162,7 +123,7 @@ def session_volume_cert(spark: SparkSession, data_dir: str, gen: dict) -> dict:
     agg = ev.groupBy(F.session_window("ts", SESSION_GAP).alias("w"), "user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    out, progress = _run_to_completion(agg, spark, "append", "vol_session")
+    out, progress = drain(agg, spark, "append")
     emitted = out.select(
         F.col("w.start").cast("long").alias("session_start"),
         F.col("w.end").cast("long").alias("session_end"),
@@ -241,7 +202,7 @@ def stateful_volume_cert(spark: SparkSession, data_dir: str, gen: dict) -> dict:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    out, progress = _run_to_completion(agg, spark, "update", "vol_stateful")
+    out, progress = drain(agg, spark, "update")
     # update mode re-emits a user's cumulative count every batch that touches
     # it; the final value per user is the max
     final = out.groupBy("user_id").agg(F.max("n_events").alias("n_events"))
@@ -394,7 +355,7 @@ def join_volume_cert(
         f"AND click_ts <= ts + interval {JOIN_RANGE}"
     )
     j = imp.join(clk, cond, "leftOuter")
-    out, progress = _run_to_completion(_join_select(j), spark, "append", "vol_join")
+    out, progress = drain(_join_select(j), spark, "append")
     emitted = out.filter(F.col("imp_id") >= 0).cache()
 
     n_input, dropped, peak_state = _progress_counters(progress)

@@ -20,16 +20,38 @@ parquet/Kafka sink without touching the aggregation.
 from __future__ import annotations
 
 import os
+import tempfile
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 from ..sources.catalog import load_table
 from ..operators.registry import register
+from ..session import scoped_conf
 
 _SINK_LOCK = threading.Lock()
 _SINK_SEQ = [0]
+
+# ---------------------------------------------------------------------------
+# The stream harness: every streaming query in the package places its stream
+# files with ``stream_dir``, reads them with ``file_stream`` and runs to
+# completion through ``drain``.
+# ---------------------------------------------------------------------------
+
+
+def stream_dir(kind: str, sf_dir: str) -> str:
+    """Directory for the ``kind`` stream files of ``sf_dir``, under the
+    process temp dir (``tempfile.gettempdir()``, which follows ``TMPDIR``)."""
+    return os.path.join(tempfile.gettempdir(), kind, sf_dir.strip("/").replace("/", "_"))
+
+
+def file_stream(spark: SparkSession, path: str, schema: StructType) -> DataFrame:
+    """Parquet file source over the directory ``path``, one file per
+    trigger: the rate throttle that makes a watermark advance between
+    files."""
+    return spark.readStream.schema(schema).option("maxFilesPerTrigger", "1").parquet(path)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -40,9 +62,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = os.path.join(sf_dir, "events.parquet")
     # Spark's file stream source requires a directory; the driver data is a
     # single file → expose it through a symlink dir (read-only testdata).
-    link_dir = os.path.join(
-        "/tmp/spark_graft_stream", sf_dir.strip("/").replace("/", "_")
-    )
+    link_dir = stream_dir("spark_graft_stream", sf_dir)
     os.makedirs(link_dir, exist_ok=True)
     link = os.path.join(link_dir, "events.parquet")
     # lexists, not exists: exists() follows the link, so a dangling link (the
@@ -56,11 +76,7 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     else:
         os.symlink(path, link)
     raw_schema = spark.read.parquet(path).schema
-    stream = (
-        spark.readStream.schema(raw_schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(link_dir)
-    )
+    stream = file_stream(spark, link_dir, raw_schema)
     ts_type = dict((f.name, f.dataType.simpleString()) for f in raw_schema).get("ts")
     if ts_type == "bigint":
         stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
@@ -82,34 +98,30 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 STREAM_STATE_PARTITIONS = 4
 
 
-def _drain(agg: DataFrame, spark: SparkSession, output_mode: str) -> DataFrame:
-    """Run the streaming aggregation to completion through a memory sink and
-    return the materialized result as a (static) DataFrame."""
+def drain(agg: DataFrame, spark: SparkSession, mode: str) -> tuple[DataFrame, list]:
+    """Run the stream to completion through a memory sink; returns the
+    result table and every micro-batch's progress report.
+
+    ``q.recentProgress`` is a ring buffer capped at
+    spark.sql.streaming.numRecentProgressUpdates (default 100): with one
+    file per micro-batch, a run above ~98 files would silently drop the
+    earliest batches' progress.  The cap is raised for the whole run (it is
+    read on every progress update) and restored after ``stop()``.  The
+    shuffle width is captured at ``start()``, so it is capped only around
+    that call and the session's batch plans keep their own setting."""
     with _SINK_LOCK:
         _SINK_SEQ[0] += 1
         name = f"stream_sink_{_SINK_SEQ[0]}"
-    prev = spark.conf.get("spark.sql.shuffle.partitions")
-    try:
-        target = min(int(prev), STREAM_STATE_PARTITIONS)
-    except (TypeError, ValueError):
-        target = STREAM_STATE_PARTITIONS
-    spark.conf.set("spark.sql.shuffle.partitions", str(target))
-    try:
-        q = (
-            agg.writeStream.outputMode(output_mode)
-            .format("memory")
-            .queryName(name)
-            .start()
-        )
-    finally:
-        # the partition count was captured at .start(); restore immediately
-        # so the session's batch plans keep their own setting
-        spark.conf.set("spark.sql.shuffle.partitions", prev)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(name)
+    parts = min(int(spark.conf.get("spark.sql.shuffle.partitions")), STREAM_STATE_PARTITIONS)
+    with scoped_conf(spark, {"spark.sql.streaming.numRecentProgressUpdates": "10000"}):
+        with scoped_conf(spark, {"spark.sql.shuffle.partitions": str(parts)}):
+            q = agg.writeStream.outputMode(mode).format("memory").queryName(name).start()
+        try:
+            q.processAllAvailable()
+            progress = [p for p in q.recentProgress if p is not None]
+        finally:
+            q.stop()
+    return spark.table(name), progress
 
 
 # ---------------------------------------------------------------------------
@@ -123,7 +135,7 @@ def stream_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
-    out = _drain(agg, spark, "complete")
+    out, _ = drain(agg, spark, "complete")
     return out.select(
         F.col("w.start").cast("long").alias("window_start"),
         "event_type",
@@ -169,7 +181,7 @@ def stream_sliding(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(
         F.window("ts", "12 hours", "6 hours").alias("w"), "event_type"
     ).agg(F.count(F.lit(1)).alias("n_events"))
-    out = _drain(agg, spark, "complete")
+    out, _ = drain(agg, spark, "complete")
     return out.select(
         F.col("w.start").cast("long").alias("window_start"),
         "event_type",
@@ -198,7 +210,7 @@ def stream_session(spark: SparkSession, sf_dir: str) -> DataFrame:
     agg = ev.groupBy(F.session_window("ts", "30 minutes").alias("w"), "user_id").agg(
         F.count(F.lit(1)).alias("n_events")
     )
-    out = _drain(agg, spark, "complete")
+    out, _ = drain(agg, spark, "complete")
     return out.select(
         F.col("w.start").cast("long").alias("session_start"),
         F.col("w.end").cast("long").alias("session_end"),
@@ -277,7 +289,7 @@ def stream_stateful_user_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="update",
         timeoutConf=GroupStateTimeout.NoTimeout,
     )
-    return _drain(agg, spark, "update")
+    return drain(agg, spark, "update")[0]
 
 
 # single-file source → one micro-batch → the emitted update equals the batch
@@ -362,7 +374,7 @@ def stream_tws_extremes(spark: SparkSession, sf_dir: str) -> DataFrame:
         outputMode="Update",
         timeMode="None",
     )
-    return _drain(agg, spark, "update")
+    return drain(agg, spark, "update")[0]
 
 
 STREAM_TWS_EXTREMES_SQL = """\
@@ -393,7 +405,7 @@ def stream_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     deduped = ev.select("user_id", "event_type", "ts").dropDuplicates(
         ["user_id", "event_type"]
     )
-    out = _drain(deduped.select("user_id", "event_type"), spark, "append")
+    out, _ = drain(deduped.select("user_id", "event_type"), spark, "append")
     return out
 
 
@@ -432,15 +444,12 @@ def _purchase_click_join(spark: SparkSession, sf_dir: str, how: str) -> DataFram
         & (F.col("c_ts") <= F.col("p_ts") + F.expr("INTERVAL 1 HOUR")),
         how,
     )
-    return _drain(
-        joined.select(
-            "user_id",
-            F.unix_micros("p_ts").alias("purchase_us"),
-            F.unix_micros("c_ts").alias("click_us"),
-        ),
-        spark,
-        "append",
+    out = joined.select(
+        "user_id",
+        F.unix_micros("p_ts").alias("purchase_us"),
+        F.unix_micros("c_ts").alias("click_us"),
     )
+    return drain(out, spark, "append")[0]
 
 
 def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -525,7 +534,7 @@ def stream_approx_ndv(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # complete mode (like stream_tumbling): append would hold back the final
     # day, whose window end the watermark never passes on a finite source
-    est = _drain(
+    est, _ = drain(
         agg.select(
             F.date_format(F.col("__w.start"), "yyyy-MM-dd").alias("day"), "__est"
         ),
@@ -573,7 +582,7 @@ def stream_static_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_events"),
         F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
     )
-    return _drain(agg, spark, "complete")
+    return drain(agg, spark, "complete")[0]
 
 
 STREAM_STATIC_JOIN_SQL = """\
@@ -615,7 +624,7 @@ def stream_chained_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     day = six.groupBy(
         F.window(F.window_time("w6"), "1 day").alias("wd"), "event_type"
     ).agg(F.sum("n").alias("total_events"), F.max("n").alias("peak_6h"))
-    out = _drain(day, spark, "append")
+    out, _ = drain(day, spark, "append")
     return out.select(
         F.col("wd.start").cast("long").alias("window_start"),
         "event_type",
@@ -669,7 +678,7 @@ def stream_session_dynamic(spark: SparkSession, sf_dir: str) -> DataFrame:
             "n_purchases"
         ),
     )
-    out = _drain(agg, spark, "complete")
+    out, _ = drain(agg, spark, "complete")
     return out.select(
         F.col("w.start").cast("long").alias("session_start"),
         F.col("w.end").cast("long").alias("session_end"),

@@ -1,7 +1,9 @@
-"""Guard: one way to materialize.  Thread-pool fan-out, eager DISK_ONLY
-checkpoints and parquet-footer reads live in operators/iterutil.py; a
-hand-rolled copy anywhere else in the package fails here.  Source scan
-only — no Spark."""
+"""Guard: one way to materialize and one stream harness.  Thread-pool
+fan-out, eager DISK_ONLY checkpoints and parquet-footer reads live in
+operators/iterutil.py; memory-sink drains and one-file-per-trigger readers
+in streaming/windows.py; session-conf unsets in session.py (scoped_conf);
+no path is rooted at a literal /tmp.  A hand-rolled copy anywhere else in
+the package fails here.  Source scan only — no Spark."""
 
 from __future__ import annotations
 
@@ -15,11 +17,16 @@ PKG = Path(__file__).resolve().parents[1] / "ad_hoc_olap_query_processing_engine
 # (rule, pattern, files allowed to match).  warmup.py keeps its own pool:
 # it is capped at 4 workers and cost-ordered, a different policy.
 MODULE = "operators/iterutil.py"
+STREAM = "streaming/windows.py"
 RULES = [
     ("thread pool", r"ThreadPoolExecutor\(", {MODULE, "operators/warmup.py"}),
     ("DISK_ONLY localCheckpoint", r"localCheckpoint\([^)]*DISK_ONLY", {MODULE}),
     ("parquet footer read", r"ParquetFile\([^)]*\)\.metadata", {MODULE}),
     ("group-table persist knob", r"PERSIST_GROUP_TABLE", set()),
+    ("memory-sink drain", r"format\(\s*[\"']memory[\"']\s*\)", {STREAM}),
+    ("one-file-per-trigger reader", r"maxFilesPerTrigger", {STREAM}),
+    ("session-conf unset", r"conf\.unset\(", {"session.py"}),
+    ("literal /tmp path", r"[\"']/tmp", set()),
 ]
 
 
@@ -42,9 +49,9 @@ def test_no_hand_rolled_copy(rule, pattern, allowed):
 
 
 def test_guard_sees_the_module():
-    """The patterns match the one sanctioned copy, so a rename cannot turn
-    the guard into a no-op."""
-    src = _sources()[MODULE]
+    """Each pattern matches every sanctioned copy in its own home file, so
+    a rename cannot turn the guard into a no-op."""
+    src = _sources()
     for rule, pattern, allowed in RULES:
-        if allowed:
-            assert re.search(pattern, src, re.S), rule
+        for home in sorted(allowed):
+            assert re.search(pattern, src[home], re.S), (rule, home)

@@ -118,16 +118,13 @@ class TestSessionCacheEviction:
 
         name = "__test_r13_invalidate"
         session_cache.invalidate(name)
-        called = []
         df = session_cache.session_cached(
             name, spark, "/tmp/__r13_sf_x",
             lambda: self._build_ckpt(spark, "x"),
-            release=lambda: called.append(True),
         )
         rid = _checkpoint_rdd_id(df)
         assert rid in _persisted_rdd_ids(spark)
         session_cache.invalidate(name)
-        assert called == [True], "explicit release callback did not run"
         assert rid not in _persisted_rdd_ids(spark)
 
     def test_plain_persist_entries_still_released(self, spark):

@@ -12,6 +12,9 @@
 3. The re-attributed maintenance queries perform their refresh per
    invocation (verdict r13 #1): a second call must NOT return the cached
    generation's identical DataFrame object.
+4. sim_recall_report owns its six branch frames and releases them at the
+   next call (ADVICE r14 #3): a second call must not leave six more
+   persisted RDDs behind, and the first call's report must still evaluate.
 """
 
 from __future__ import annotations
@@ -88,3 +91,19 @@ class TestRefreshPerInvocation:
         a = maintenance.stream_minhash_maintenance(spark, SF)
         b = maintenance.stream_minhash_maintenance(spark, SF)
         assert a is not b
+
+
+class TestRecallReportReleasesBranches:
+    def test_second_call_releases_the_first_calls_branches(self, spark):
+        from ad_hoc_olap_query_processing_engine_spark.operators import similarity
+
+        def n_persisted() -> int:
+            return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+        first = similarity.sim_recall_report(spark, SF)
+        rows = sorted(first.collect())
+        n1 = n_persisted()
+        second = similarity.sim_recall_report(spark, SF)
+        assert sorted(second.collect()) == rows
+        assert n_persisted() <= n1
+        assert sorted(first.collect()) == rows
