@@ -7,8 +7,16 @@ checkpoint's blocks live on its RDD, which ``DataFrame.unpersist`` cannot
 reach, so its owner frees it with ``session_cache.release_blocks``.  A
 persist is freed with a plain ``unpersist()``: ``release_blocks`` walks
 every LogicalRDD leaf of the plan, so on a persisted frame it would also
-free checkpointed INPUTS that belong to someone else.  Query-time
-checkpoints whose frames the caller may still read stay unowned.
+free checkpointed INPUTS that belong to someone else.  A frame of a
+stopped SparkContext is dropped without a call into it: its blocks died
+with the context.  Query-time checkpoints whose frames the caller may
+still read stay unowned.
+
+Per-call state (``generation``): a query pins what it keeps between calls
+into its call's ``Pins``; when the call returns, that ``Pins`` becomes the
+query's live generation, and only then is the previous one released (swap,
+then release).  A frame kept from an earlier call recomputes if it was
+persisted and cannot be read if it was checkpointed.
 
 Iteration-safe checkpointing: ``Dataset.checkpoint`` (and
 ``localCheckpoint``) captures the checkpointed PHYSICAL plan's metadata —
@@ -35,7 +43,9 @@ internal constructor ever moves.
 from __future__ import annotations
 
 import threading
-from collections.abc import Callable
+from collections import defaultdict
+from collections.abc import Callable, Iterator
+from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame
@@ -89,6 +99,16 @@ def disk_checkpoint(df: DataFrame) -> DataFrame:
     return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
+def _stopped(df: DataFrame) -> bool:
+    """True for a frame of a stopped SparkContext (PySpark drops the
+    context's JVM handle at ``stop()``)."""
+    return df.sparkSession.sparkContext._jsc is None  # noqa: SLF001
+
+
+def _analyzed(df: DataFrame) -> Any:
+    return df._jdf.queryExecution().analyzed()  # noqa: SLF001
+
+
 class Pins:
     """Owner of pinned frames.  ``release(*keep)`` frees every owned frame
     not in ``keep`` (by identity) the way it was pinned, and keeps the
@@ -120,10 +140,44 @@ class Pins:
                 kept = any(df is k for k in keep)
                 (self._owned if kept else freed).append((df, checkpointed))
         for df, checkpointed in freed:
+            if _stopped(df):
+                continue
             if checkpointed:
                 release_blocks(df)
             else:
                 df.unpersist()
+
+    def persisted(self) -> list[DataFrame]:
+        with self._lock:
+            return [df for df, checkpointed in self._owned if not checkpointed]
+
+
+# query name -> its live generation (the Pins of its latest finished call)
+_LIVE: defaultdict[str, Pins] = defaultdict(Pins)
+_LIVE_LOCK = threading.Lock()
+
+
+@contextmanager
+def generation(name: str) -> Iterator[Pins]:
+    """The per-call owner of query ``name`` (see module doc).  A call that
+    raises releases its own pins and leaves the live generation.  A persist
+    of an already-cached plan adds no cache entry, so a previous frame whose
+    plan the new generation persisted again is handed over, not released."""
+    pins = Pins()
+    try:
+        yield pins
+    except BaseException:
+        pins.release()
+        raise
+    with _LIVE_LOCK:
+        old, _LIVE[name] = _LIVE[name], pins
+    plans = [_analyzed(df) for df in pins.persisted()]
+    shared = [
+        df
+        for df in old.persisted()
+        if not _stopped(df) and any(_analyzed(df).sameResult(p) for p in plans)
+    ]
+    old.release(*shared)
 
 
 def overlap(*thunks: Callable[[], Any]) -> list[Any]:

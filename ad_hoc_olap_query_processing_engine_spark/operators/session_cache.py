@@ -5,6 +5,8 @@ verified near-dup pairs, SRP projections, the hourly rollup tier): at
 warehouse scale these are tables a pipeline materializes once and many jobs
 read. Locally the analogue is a persisted DataFrame built once per
 (SparkSession, sf_dir). One helper instead of a hand-rolled dict per module.
+State a query rebuilds on every call is no entry: it is that call's
+generation (``iterutil.generation``).
 
 Lifecycle rules (the leaks a long-lived embedding host would otherwise hit):
 

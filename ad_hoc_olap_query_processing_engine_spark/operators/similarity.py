@@ -59,9 +59,10 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..sources.catalog import load_table
-from .iterutil import Pins, footer_rows, overlap
+from .iterutil import footer_rows, generation, overlap
 from .registry import register
 
 N_QUERIES = 10
@@ -496,8 +497,10 @@ def sim_srp_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "embeddings", sf_dir)
     # the bucket index feeds the scan side AND the (filtered) query side —
     # persist so the banding pipeline runs once (projections come from the
-    # shared session-scoped table)
-    buckets = _srp_buckets(e, proj=srp_projections(spark, sf_dir)).persist()
+    # shared session-scoped table); the persist is the call's generation
+    buckets = _srp_buckets(e, proj=srp_projections(spark, sf_dir))
+    with generation("sim_srp_ann") as pins:
+        buckets = pins.persist(buckets, StorageLevel.MEMORY_AND_DISK_DESER)
     queries = buckets.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("embedding").alias("q_emb"),
@@ -562,14 +565,13 @@ def dedup_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     # the index feeds BOTH sides of the self-join — persist it so the whole
     # projection pipeline runs once ("materialize the index" at scale); keep
     # the self-join and its DISTINCT on bare ids (a pair can collide in
-    # several bands) so the shuffle never carries embedding arrays
-    idx = (
-        _srp_buckets(
-            e, DEDUP_SRP_BITS, DEDUP_SRP_BANDS, proj=srp_projections(spark, sf_dir)
-        )
-        .select("vec_id", "bucket")
-        .persist()
-    )
+    # several bands) so the shuffle never carries embedding arrays; the
+    # persist is the call's generation
+    idx = _srp_buckets(
+        e, DEDUP_SRP_BITS, DEDUP_SRP_BANDS, proj=srp_projections(spark, sf_dir)
+    ).select("vec_id", "bucket")
+    with generation("dedup_embedding") as pins:
+        idx = pins.persist(idx, StorageLevel.MEMORY_AND_DISK_DESER)
     a, b = idx.alias("a"), idx.alias("b")
     pair_ids = (
         a.join(
@@ -2427,12 +2429,6 @@ register("embed_matryoshka_eval", embed_matryoshka_eval, EMBED_MATRYOSHKA_EVAL_S
 # ---------------------------------------------------------------------------
 
 
-# Owner of the branch frames of the latest sim_recall_report call; the next
-# call releases them.  A persist keeps its lineage, so a report from an
-# earlier call still evaluates afterwards, by recomputing its branches.
-_RECALL_PINS = Pins()
-
-
 def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 14 (verdict r13 #2): the six branch pipelines (brute + 5 ANN
     # serves) are materialized as CONCURRENT JOBS from a small thread pool
@@ -2447,7 +2443,6 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # driver-side result collection anywhere.  In a cold session the
     # concurrent branch builds of shared artifacts serialize safely under
     # session_cache's per-artifact build locks (the warmup-pool precedent).
-    _RECALL_PINS.release()
     methods = [
         ("srp", sim_srp_ann),
         ("ivf", sim_ivf_ann),
@@ -2460,13 +2455,18 @@ def sim_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     def _branch(fn) -> DataFrame:
         # the blocking count IS the fan-out (one job per branch, running
         # concurrently with its five siblings)
-        df = _RECALL_PINS.persist(fn(spark, sf_dir).select("query_id", "vec_id"))
+        df = pins.persist(fn(spark, sf_dir).select("query_id", "vec_id"))
         df.count()
         return df
 
-    brute, *frames = overlap(
-        partial(_branch, sim_brute_topk), *[partial(_branch, fn) for _, fn in methods]
-    )
+    # the branch persists are the call's generation: the next call releases
+    # them once its own branches are built, and a report from an earlier
+    # call still evaluates, by recomputing its branches
+    with generation("sim_recall_report") as pins:
+        brute, *frames = overlap(
+            partial(_branch, sim_brute_topk),
+            *[partial(_branch, fn) for _, fn in methods],
+        )
     method_frames = [(mname, m) for (mname, _), m in zip(methods, frames)]
     total = brute.agg(F.count(F.lit(1)).alias("__n_total"))
     out = None

@@ -74,11 +74,6 @@ _BUILDERS: list[tuple[str, str, str]] = [
     ("sim.pq", "similarity", "pq_codes"),
     # text family: corpus bigram-LM fluency scores
     ("text", "text", "bigram_lm_scores"),
-    # streaming maintenance (round 14, verdict r13 #1): warm ONLY the
-    # generation-0 empty store (schema-correct empty checkpoints — also a
-    # tiny same-shape codegen pass for the fold's pipelines); the timed
-    # stream_minhash_maintenance now drives the micro-batch fold itself
-    ("stream", "streaming.maintenance", "_stream_empty_store"),
 ]
 
 
@@ -104,16 +99,10 @@ def warm_family_indexes(
             if b[1] in modules or f"{b[1]}.{b[2]}" in modules
         ]
     )
-    top_pkg = __package__.rsplit(".", 1)[0]
 
     def run_builder(mod_name: str, attr: str) -> None:
         try:
-            try:
-                mod = importlib.import_module(f"{__package__}.{mod_name}")
-            except ModuleNotFoundError:
-                # dotted names outside operators/ (e.g. streaming.maintenance)
-                # resolve against the top-level package
-                mod = importlib.import_module(f"{top_pkg}.{mod_name}")
+            mod = importlib.import_module(f"{__package__}.{mod_name}")
             fn = getattr(mod, attr)
             t0 = time.perf_counter()
             out = fn(spark, sf_dir)
@@ -127,9 +116,8 @@ def warm_family_indexes(
     # §2.6: the scheduler happily runs several jobs at once; sequential
     # builds left most of the machine idle during each build's tail).
     # Within a chain, order IS the dependency order (later builders read
-    # earlier artifacts); across chains the only links (e.g. the streaming
-    # maintenance fold touching dedup pair artifacts, IVFPQ reading the IVF
-    # assignments) are serialized safely by session_cache's per-artifact
+    # earlier artifacts); across chains the only links (e.g. IVFPQ reading
+    # the IVF assignments) are serialized safely by session_cache's per-artifact
     # build locks — a chain that hits a dependency mid-build simply waits
     # for it.  Timings per builder are charged to the thread that ran the
     # build, so the reported per-index seconds stay attributable; the
@@ -162,7 +150,6 @@ def warm_family_indexes(
         "sim.ivf": 4,
         "dedup.capped": 5,
         "sim.pq": 6,
-        "stream": 7,
     }
     order = sorted(
         chains.items(), key=lambda kv: (cost_rank.get(kv[0], 9), -len(kv[1]))

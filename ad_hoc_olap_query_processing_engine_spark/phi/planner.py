@@ -77,7 +77,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
-from ..operators.iterutil import Pins
+from ..operators.iterutil import Pins, generation
 from .ast import Cond, GroupingVar, Having, Operand, PhiQuery
 
 _PYOPS = {
@@ -101,12 +101,6 @@ _THETA_FRAMES = {
 
 class PhiPlanError(ValueError):
     pass
-
-
-# Owner of the group-table persists of the latest compile_phi call; the
-# next call releases them.  A persist keeps its lineage, so a frame from an
-# earlier call still evaluates afterwards, by recomputing its group table.
-_GROUP_PINS = Pins()
 
 
 @dataclass
@@ -347,8 +341,13 @@ def _rowcond_operand(o: Operand, g0_names: frozenset[str] | set[str]) -> Column:
 
 
 def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
-    """Compile a PhiQuery against the given input relation."""
-    _GROUP_PINS.release()
+    """Compile a PhiQuery against the given input relation.  The group-table
+    persists are the call's generation (``iterutil.generation``)."""
+    with generation("compile_phi") as pins:
+        return _compile(q, sales, pins)
+
+
+def _compile(q: PhiQuery, sales: DataFrame, pins: Pins) -> DataFrame:
     v = q.group_attrs
     base = sales
     where = _sigma(q.where)
@@ -442,7 +441,7 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
         (p.strategy == "window" and p.theta is None) or p.strategy == "group_join"
         for p in plans
     ):
-        groups = _GROUP_PINS.persist(groups)
+        groups = pins.persist(groups)
     for p in plans:
         if p.strategy != "window":
             continue
@@ -516,7 +515,7 @@ def compile_phi(q: PhiQuery, sales: DataFrame) -> DataFrame:
     # pay the fact-table pipeline once instead of once per reference.
     acc = groups
     if any(p.strategy == "join" for p in plans):
-        acc = _GROUP_PINS.persist(acc)
+        acc = pins.persist(acc)
     for p in plans:
         if p.strategy != "join":
             continue

@@ -26,7 +26,8 @@ is never rescanned.  The store frames are DISK_ONLY-checkpointed between
 batches (bounded lineage — the round-10 iterative-checkpoint lesson) and
 the previous generation's blocks are released as soon as the new
 generation is materialized, so state on the host is one store generation,
-not one per batch.
+not one per batch.  Across calls the drive's pins are the call's
+generation (``iterutil.generation``); generation 0 is four empty frames.
 """
 
 from __future__ import annotations
@@ -37,7 +38,7 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.iterutil import Pins, disk_checkpoint, overlap
+from ..operators.iterutil import generation, overlap
 from ..operators.registry import register
 from ..sources.catalog import load_table
 
@@ -78,31 +79,18 @@ def _write_batches(spark: SparkSession, sf_dir: str) -> str:
     return out
 
 
-def _stream_empty_store(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
+def _stream_empty_store(
+    spark: SparkSession, docs: DataFrame, big: bool
+) -> dict[str, DataFrame]:
     """Generation-0 store: EMPTY but schema-correct frames (schemas derived
     from the real pipelines over a zero-row doc frame, never hardcoded).
     The first fold's "kept" legs are then no-ops and the refresh degenerates
-    to a from-scratch build of batch 0.  Checkpointed so generation 0 is
-    bare LogicalRDDs like every later generation — feeding the RAW empty
-    plans into the fold leaves the first cands1 union with legs that share
-    subtrees/attribute ids, which trips Catalyst's union constraint rewrite
-    (NoSuchElementException: key not found: band#N during localCheckpoint).
-
-    Session-cached, one entry per frame (round 14, verdict r13 #1): the
-    four frames are empty and immutable, so re-drives reuse them, and the
-    bench warmup pre-pays their checkpoint jobs — which double as a tiny same-shape codegen pass for the
-    fold's shingle/band/candidate/verify pipelines — without touching the
-    stream's actual per-batch work."""
-    from ..operators.dedup import (
-        _corpus_is_big,
-        _shingles,
-        _verify_candidates,
-        lsh_bands,
-    )
+    to a from-scratch build of batch 0.  ``createDataFrame([], schema)``
+    frames share no plan node with a fold's legs, start no Spark job and
+    hold no blocks, so nothing owns or caches them."""
+    from ..operators.dedup import _shingles, _verify_candidates, lsh_bands
     from ..operators.pipeline import _windowed_bucket_pairs
-    from ..operators.session_cache import session_cached
 
-    docs = load_table(spark, "documents", sf_dir)
     empty_sh = _shingles(docs.limit(0))
     empty_bands = lsh_bands(empty_sh)
     empty_cands = _windowed_bucket_pairs(empty_bands)
@@ -110,63 +98,33 @@ def _stream_empty_store(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame
         "bands": empty_bands,
         "cands": empty_cands,
         "pairs": _verify_candidates(
-            empty_sh, empty_cands.select("doc_a", "doc_b"), big=_corpus_is_big(sf_dir)
+            empty_sh, empty_cands.select("doc_a", "doc_b"), big=big
         ),
         "postings": empty_sh,
     }
-    # one session-cached frame per store; the independent blocking
-    # checkpoints of a first build overlap
-    frames = overlap(
-        *[
-            lambda k=k, df=df: session_cached(
-                f"stream_maint_g0_{k}", spark, sf_dir, lambda: disk_checkpoint(df)
-            )
-            for k, df in empty.items()
-        ]
-    )
-    return dict(zip(empty, frames))
+    return {k: spark.createDataFrame([], df.schema) for k, df in empty.items()}
 
 
 def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Verified near-dup pair table maintained across a stream of insert
     micro-batches; ≡ a from-scratch rebuild over the whole corpus.
 
-    Round 14 (verdict r13 #1): every invocation DRIVES the stream — the
-    cache entry is invalidated up front, so a timed run pays the micro-batch
-    fold (the cert's actual work) instead of reading a warmup-built product
-    (round 13's bench warmup drove the whole stream, leaving the timed query
-    a 0.03 s cache read).  This matches the other stream_* certs, which all
-    re-run their micro-batch pipelines per invocation; the entry still lands
-    in session_cache between invocations so the previous generation's blocks
-    are released checkpoint-aware on the next drive."""
-    from ..operators.session_cache import invalidate, session_cached
-
-    invalidate("stream_maint_pairs")
-    return session_cached(
-        "stream_maint_pairs",
-        spark,
-        sf_dir,
-        lambda: _drive_maintenance_stream(spark, sf_dir),
-    )
-
-
-def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    Every invocation DRIVES the stream (a timed run pays the micro-batch
+    fold).  One generation is live: the drive's pins are the call's
+    generation (``iterutil.generation``), so a frame kept from an earlier
+    call cannot be read after a later call — its blocks are gone."""
     from ..operators.dedup import _corpus_is_big, _shingles
     from ..operators.pipeline import refresh_pair_store
     from .windows import file_stream
 
     batch_src = _write_batches(spark, sf_dir)
     big = _corpus_is_big(sf_dir)
-
-    # generation-0 empty store: a session-cached immutable artifact (see
-    # _stream_empty_store) — re-drives reuse it, and the drive never owns
-    # its frames
-    g0 = _stream_empty_store(spark, sf_dir)
+    # the batches are slices of the documents table: the stream and g0 take
+    # their schemas from it, so a batch dir without files drives zero folds
+    # (guarded below) instead of failing schema inference
+    docs = load_table(spark, "documents", sf_dir)
+    g0 = _stream_empty_store(spark, docs, big)
     state: dict[str, DataFrame] = dict(g0)
-    # ONE owner for everything the drive pins: each fold releases all but
-    # the live store (one generation of cands/pairs plus the append-only
-    # band and posting legs accumulated across the drive)
-    pins = Pins()
     legs: list[DataFrame] = []
     pair_legs: list[DataFrame] = []
 
@@ -212,26 +170,21 @@ def _drive_maintenance_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         pair_legs[:] = [kept_base_ck, frames["fresh_verified"]]
         pins.release(*legs, kept_cands_ck, frames["cand_dirty"], *pair_legs)
 
-    # the batches are slices of the documents table: take the schema from
-    # the table, so a batch dir without files drives zero folds (guarded
-    # below) instead of failing schema inference
-    stream = file_stream(spark, batch_src, load_table(spark, "documents", sf_dir).schema)
-    q = (
-        stream.writeStream.foreachBatch(fold)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    if state["pairs"] is g0["pairs"]:
-        # returning the g0 frame would hand the caller blocks that the next
-        # invalidate of this entry releases out from under the cached g0
-        raise RuntimeError(
-            f"stream_minhash_maintenance: no micro-batch folded from {batch_src}"
-        )
-    # the caller consumes only the pair table; release everything else the
-    # drive pinned (final cands generation, band and posting legs) — never
-    # the session-cached g0 frames, which the drive does not own
-    pins.release(*pair_legs)
+    # ONE owner for everything the drive pins, the call's generation: each
+    # fold releases all but the live store (one generation of cands/pairs
+    # plus the append-only band and posting legs accumulated so far)
+    with generation("stream_minhash_maintenance") as pins:
+        stream = file_stream(spark, batch_src, docs.schema)
+        q = stream.writeStream.foreachBatch(fold).trigger(availableNow=True).start()
+        q.awaitTermination()
+        if state["pairs"] is g0["pairs"]:
+            # nothing was maintained: the empty g0 table is not a result
+            raise RuntimeError(
+                f"stream_minhash_maintenance: no micro-batch folded from {batch_src}"
+            )
+        # the caller consumes only the pair table; release everything else
+        # the drive pinned (final cands generation, band and posting legs)
+        pins.release(*pair_legs)
     return state["pairs"]
 
 

@@ -1,10 +1,16 @@
 """The materialization module (operators/iterutil.py): fan-out, footer
-reads and the ``Pins`` owner (byte sizing is pinned in test_round14_opt),
-plus the Φ planner's use of an owner for its group-table persists."""
+reads, the ``Pins`` owner and the per-call ``generation`` owner (byte
+sizing is pinned in test_round14_opt), plus the queries that keep their
+per-call persists in a generation."""
 
 from __future__ import annotations
 
+import subprocess
+import sys
+import textwrap
 import time
+from pathlib import Path
+from types import SimpleNamespace
 
 import pytest
 
@@ -12,6 +18,7 @@ from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import (
     Pins,
     disk_checkpoint,
     footer_rows,
+    generation,
     overlap,
 )
 
@@ -68,11 +75,29 @@ class TestFooterRows:
         assert footer_rows(str(path)) is None
 
 
+def _session(live: bool) -> SimpleNamespace:
+    """What a frame's ``sparkSession`` shows of its context: PySpark drops
+    the context's JVM handle (``_jsc``) when the context is stopped."""
+    return SimpleNamespace(sparkContext=SimpleNamespace(_jsc=object() if live else None))
+
+
+class _FakePlan:
+    def sameResult(self, other) -> bool:
+        return self is other
+
+
 class _FakeFrame:
-    """Stands in for a DataFrame: counts persist/unpersist calls."""
+    """Stands in for a DataFrame of a live session: counts persist/unpersist
+    calls; its plan matches no other frame's."""
+
+    sparkSession = _session(live=True)
 
     def __init__(self) -> None:
         self.unpersisted = 0
+        plan = _FakePlan()
+        self._jdf = SimpleNamespace(
+            queryExecution=lambda: SimpleNamespace(analyzed=lambda: plan)
+        )
 
     def persist(self, level):
         return self
@@ -147,6 +172,23 @@ class TestPins:
         pins.release()
         assert not (kept_ck_ids | kept_ps_ids) & _stored_rdd_ids(spark)
 
+    def test_release_drops_frames_of_a_stopped_context(self):
+        """A frame of a stopped context is dropped without a call into it:
+        its blocks died with the context, and the call would raise."""
+
+        class _DeadFrame:
+            sparkSession = _session(live=False)
+
+            def persist(self, level):
+                return self
+
+            def unpersist(self):
+                raise RuntimeError("Cannot call methods on a stopped SparkContext")
+
+        pins = Pins()
+        pins.persist(_DeadFrame())
+        pins.release()
+
     def test_persist_release_spares_a_checkpointed_input(self, spark):
         from ad_hoc_olap_query_processing_engine_spark.operators.session_cache import (
             release_blocks,
@@ -173,7 +215,6 @@ def test_phi_reinvocation_holds_one_invocation_of_group_tables(spark):
         all_phi_queries,
         compile_phi,
     )
-    from ad_hoc_olap_query_processing_engine_spark.phi import planner
     from ad_hoc_olap_query_processing_engine_spark.sources import catalog
 
     qs = all_phi_queries()
@@ -182,7 +223,8 @@ def test_phi_reinvocation_holds_one_invocation_of_group_tables(spark):
     def persisted() -> int:
         return spark.sparkContext._jsc.getPersistentRDDs().size()
 
-    planner._GROUP_PINS.release()  # drop what earlier tests compiled
+    with generation("compile_phi"):
+        pass  # an empty call retires what earlier tests compiled
     n0 = persisted()
     first = compile_phi(qs["phi_q2"], sales)
     # read through a derived frame: ``first`` itself first executes after
@@ -196,3 +238,133 @@ def test_phi_reinvocation_holds_one_invocation_of_group_tables(spark):
             # at most the two group-table persists of one compile_phi call
             assert persisted() - n0 <= 2, name
     assert sorted(first.collect()) == rows
+
+
+class TestGeneration:
+    def test_concurrent_calls_release_each_superseded_generation_once(self):
+        """Concurrent calls of one query swap generations; a lost swap would
+        release one generation twice and another never."""
+        import threading
+
+        frames: list[_FakeFrame] = []
+
+        def calls():
+            for _ in range(300):
+                with generation("__test_concurrent") as pins:
+                    frames.append(pins.persist(_FakeFrame()))
+
+        old = sys.getswitchinterval()
+        sys.setswitchinterval(1e-6)
+        try:
+            threads = [threading.Thread(target=calls) for _ in range(8)]
+            for t in threads:
+                t.start()
+            for t in threads:
+                t.join(timeout=60)
+            assert not any(t.is_alive() for t in threads)
+        finally:
+            sys.setswitchinterval(old)
+        with generation("__test_concurrent"):
+            pass
+        assert len(frames) == 2400
+        assert all(f.unpersisted == 1 for f in frames)
+
+    def test_previous_generation_is_released_after_the_swap(self, spark):
+        with generation("__test_swap") as pins:
+            pins.persist(spark.range(30)).count()
+        ids0 = _stored_rdd_ids(spark)
+        with generation("__test_swap") as pins:
+            new = pins.persist(spark.range(40))
+            new.count()
+            new_ids = _stored_rdd_ids(spark) - ids0
+            # the call runs while the previous generation is still live
+            assert ids0 <= _stored_rdd_ids(spark)
+        after = _stored_rdd_ids(spark)
+        assert new_ids and new_ids <= after
+        assert len(ids0 - after) == 1  # the first call's persist is gone
+        with generation("__test_swap"):
+            pass
+        assert not new_ids & _stored_rdd_ids(spark)
+
+    def test_a_plan_persisted_again_is_handed_over(self, spark):
+        """A persist of an already-cached plan adds no cache entry: the new
+        generation reads the previous one's, which must stay."""
+        with generation("__test_handover") as pins:
+            before = _stored_rdd_ids(spark)
+            pins.persist(spark.range(25).selectExpr("id * 3 AS x")).count()
+            ids = _stored_rdd_ids(spark) - before
+        with generation("__test_handover") as pins:
+            again = pins.persist(spark.range(25).selectExpr("id * 3 AS x"))
+        assert ids and ids <= _stored_rdd_ids(spark)
+        assert again.storageLevel.useMemory
+        assert again.count() == 25
+        with generation("__test_handover"):
+            pass
+        assert not ids & _stored_rdd_ids(spark)
+
+    def test_a_raising_call_releases_its_pins_and_keeps_the_live_ones(self, spark):
+        with generation("__test_raise") as pins:
+            live = pins.persist(spark.range(11))
+            live.count()
+        with pytest.raises(ValueError), generation("__test_raise") as pins:
+            failed = pins.persist(spark.range(12))
+            failed.count()
+            raise ValueError
+        assert not failed.storageLevel.useMemory
+        assert live.storageLevel.useMemory
+        with generation("__test_raise"):
+            pass
+        assert not live.storageLevel.useMemory
+
+
+@pytest.mark.parametrize("name", ["sim_srp_ann", "dedup_embedding"])
+def test_ann_index_persist_is_the_calls_generation(spark, name):
+    """The bucket-index persist of each call is owned: a second call leaves
+    no second persisted frame, and the first call's frame still collects
+    the same rows."""
+    from ad_hoc_olap_query_processing_engine_spark.operators import iterutil, similarity
+
+    def persisted() -> int:
+        return spark.sparkContext._jsc.getPersistentRDDs().size()
+
+    first = getattr(similarity, name)(spark, SF_SMALL)
+    rows = sorted(first.collect())
+    n1 = persisted()
+    second = getattr(similarity, name)(spark, SF_SMALL)
+    assert sorted(second.collect()) == rows
+    assert persisted() <= n1
+    assert sorted(first.collect()) == rows
+    (index,) = iterutil._LIVE[name].persisted()
+    assert index.storageLevel.useMemory  # the second call reads a cached index
+
+
+def test_owners_survive_a_session_restart():
+    """Compiling a Φ query in a new session after the previous one was
+    stopped: the previous call's group tables belong to the stopped
+    context and are dropped, not unpersisted through it."""
+    script = textwrap.dedent(
+        f"""
+        from ad_hoc_olap_query_processing_engine_spark.phi import (
+            all_phi_queries,
+            compile_phi,
+        )
+        from ad_hoc_olap_query_processing_engine_spark.session import get_spark
+        from ad_hoc_olap_query_processing_engine_spark.sources import catalog
+
+        q = all_phi_queries()["phi_q2"]
+        for _ in range(2):
+            spark = get_spark(app_name="restart", cpus=1)
+            print(compile_phi(q, catalog.sales_df(spark, {SF_SMALL!r})).count())
+            spark.stop()
+        """
+    )
+    out = subprocess.run(
+        [sys.executable, "-c", script],
+        cwd=Path(__file__).resolve().parents[1],
+        capture_output=True,
+        text=True,
+        timeout=600,
+    )
+    assert out.returncode == 0, out.stderr[-4000:]
+    first, second = out.stdout.split()
+    assert first == second and int(first) > 0

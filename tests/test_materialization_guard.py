@@ -1,6 +1,7 @@
 """Guard: one way to materialize and one stream harness.  Thread-pool
-fan-out, eager DISK_ONLY checkpoints and parquet-footer reads live in
-operators/iterutil.py; memory-sink drains and one-file-per-trigger readers
+fan-out, eager DISK_ONLY checkpoints, parquet-footer reads and module-level
+``Pins`` owners live in operators/iterutil.py; cache invalidation in
+operators/session_cache.py; memory-sink drains and one-file-per-trigger readers
 in streaming/windows.py; session-conf unsets in session.py (scoped_conf);
 no path is rooted at a literal /tmp.  A hand-rolled copy anywhere else in
 the package fails here.  Source scan only — no Spark."""
@@ -27,6 +28,14 @@ RULES = [
     ("one-file-per-trigger reader", r"maxFilesPerTrigger", {STREAM}),
     ("session-conf unset", r"conf\.unset\(", {"session.py"}),
     ("literal /tmp path", r"[\"']/tmp", set()),
+    # per-call state has one owner (iterutil.generation), and the session
+    # cache is never used as one
+    (
+        "module-level Pins owner",
+        r"(?m)^\w+\s*(?::[^=\n]*)?=\s*(?:defaultdict\()?Pins\b",
+        {MODULE},
+    ),
+    ("session-cache invalidate", r"\binvalidate\(", {"operators/session_cache.py"}),
 ]
 
 

@@ -269,12 +269,8 @@ class TestMinhashIncremental:
     def test_batch_working_set_released(self, spark):
         """The registered query materializes the batch working set and must
         release its blocks once the refreshed pair table is cached."""
-        from ad_hoc_olap_query_processing_engine_spark.operators import (
-            pipeline,
-            session_cache,
-        )
+        from ad_hoc_olap_query_processing_engine_spark.operators import pipeline
 
-        session_cache.invalidate("mh_incr_pairs")
         before = _persisted_rdd_ids(spark)
         df = pipeline.pipe_minhash_incremental(spark, SF)
         df.count()
@@ -315,9 +311,9 @@ class TestCcIncremental:
     def test_loop_runs_on_affected_subgraph_only(self, spark):
         from ad_hoc_olap_query_processing_engine_spark.operators import pipeline
 
-        # count the refreshed table BEFORE building the frames: round 14's
-        # invalidate-first refresh releases the previous store generation on
-        # every pipe_minhash_incremental call, so frames built against one
+        # count the refreshed table BEFORE building the frames: every
+        # pipe_minhash_incremental call releases the previous store
+        # generation once its own is built, so frames built against one
         # generation must not be read across a later call
         refreshed = pipeline.pipe_minhash_incremental(spark, SF).count()
         frames = pipeline._cc_incremental_frames(spark, SF)
@@ -454,23 +450,16 @@ class TestStreamMaintenance:
         """Folding the stream must not accumulate one block set per
         micro-batch: after the drive, only the final pair table (plus any
         lazily-built family artifacts) may hold blocks."""
-        from ad_hoc_olap_query_processing_engine_spark.operators import (
-            session_cache,
-        )
         from ad_hoc_olap_query_processing_engine_spark.streaming import (
             maintenance,
         )
 
-        # the generation-0 empty store is a session-cached family artifact
-        # (round 14) — build it ahead of the snapshot so the bound below
-        # measures the drive's residual, not the g0 artifact's four frames
-        maintenance._stream_empty_store(spark, SF)
         before = _persisted_rdd_ids(spark)
         df = maintenance.stream_minhash_maintenance(spark, SF)
         df.count()
         after = _persisted_rdd_ids(spark)
-        # the cached result is a union of two checkpointed legs (kept +
-        # fresh); each fold's intermediate generations and pins must be
+        # the result, the call's live generation, is a union of two
+        # checkpointed legs (kept + fresh); each fold's intermediate generations and pins must be
         # released — bound the residual instead of fingerprinting ids
         assert len(after - before) <= 3
 
@@ -482,9 +471,14 @@ class TestRefreshStorePlans:
 
     def test_store_legs_are_broadcast_probes(self, spark):
         from ad_hoc_olap_query_processing_engine_spark.operators import pipeline
+        from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import Pins
 
-        frames = pipeline._incr_delta_frames(spark, SF)
-        for leg in ("kept_cands", "kept_base"):
-            plan = frames[leg]._jdf.queryExecution().executedPlan().toString()
-            assert "BroadcastHashJoin" in plan, f"{leg}: no broadcast probe"
-            assert "SortMergeJoin" not in plan, f"{leg}: store-sized merge join"
+        pins = Pins()
+        frames = pipeline._incr_delta_frames(spark, SF, pins)
+        try:
+            for leg in ("kept_cands", "kept_base"):
+                plan = frames[leg]._jdf.queryExecution().executedPlan().toString()
+                assert "BroadcastHashJoin" in plan, f"{leg}: no broadcast probe"
+                assert "SortMergeJoin" not in plan, f"{leg}: store-sized merge join"
+        finally:
+            pins.release()

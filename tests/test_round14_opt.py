@@ -80,9 +80,9 @@ class TestRefreshPerInvocation:
 
         a = pipeline.pipe_minhash_incremental(spark, SF)
         b = pipeline.pipe_minhash_incremental(spark, SF)
-        # invalidate-first semantics: each invocation builds a fresh store
-        # generation (same rows, new frames) — a cached identical object
-        # would mean the timed query is a cache read again
+        # each invocation builds a fresh store generation (same rows, new
+        # frames) and then retires the previous one — a cached identical
+        # object would mean the timed query is a cache read again
         assert a is not b
 
     def test_stream_maintenance_redrives_each_call(self, spark):
