@@ -160,7 +160,7 @@ def _checkpointed_pairs(sh: DataFrame, big: bool) -> DataFrame:
     (ADVICE r11 — the direct-call path leaked a corpus-sized disk persist
     per invocation)."""
     pins = Pins()
-    out = disk_checkpoint(minhash_pairs(sh, big=big, pins=pins))
+    out = disk_checkpoint(minhash_pairs(sh, pins, big=big))
     pins.release()
     return out
 
@@ -397,23 +397,6 @@ def pair_overlap_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     return session_cached("ngram_pair_overlap", spark, sf_dir, build)
 
 
-def ngram_jaccard_pairs(
-    d: DataFrame, df_cap: int = DF_CAP, postings: DataFrame | None = None
-) -> DataFrame:
-    """Near-dup pairs of ``d`` (doc_id, text) by exact word-3-gram Jaccard
-    over the stop-shingle-capped universe."""
-    sh0 = _shingles(d) if postings is None else postings
-    # the capped postings feed the self-join (both sides) AND the size table
-    # — persist the one table instead of recomputing the cap three times
-    overlap = _overlap_from_capped(_capped(sh0, df_cap).persist())
-    jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
-    return (
-        overlap.withColumn("jaccard", jac)
-        .filter(F.col("jaccard") >= JACCARD_THRESHOLD)
-        .select("doc_a", "doc_b", "jaccard")
-    )
-
-
 def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     jac = F.col("c") / (F.col("na") + F.col("nb") - F.col("c"))
     return (
@@ -534,9 +517,7 @@ def bucket_window_join(members: DataFrame) -> DataFrame:
     )
 
 
-def minhash_pairs(
-    sh: DataFrame, big: bool = True, pins: Pins | None = None
-) -> DataFrame:
+def minhash_pairs(sh: DataFrame, pins: Pins, big: bool = True) -> DataFrame:
     """Verified near-dup pairs from (persisted) shingle postings: MinHash
     signatures → banded LSH buckets (sorted-neighborhood capped) →
     exact-Jaccard verification of the candidates only. Shared by
@@ -552,7 +533,11 @@ def minhash_pairs(
     materialization of the shared subtrees — each earned by an sf100
     failure; at bench scale the same machinery was a 3-4× slowdown
     (round-11 profiling), which is exactly the size-adaptive plan choice a
-    cluster optimizer makes from table stats."""
+    cluster optimizer makes from table stats.
+
+    The big path's two DISK_ONLY persists (``sets``, ``keyed``) are pinned
+    to ``pins``; the caller releases them once the returned DataFrame is
+    materialized."""
     bands = lsh_bands(sh)
     if not big:
         cand = (
@@ -594,8 +579,6 @@ def minhash_pairs(
     # recovering the round-10 dedup_lsh_recall_report regression).
     from pyspark.storagelevel import StorageLevel
 
-    if pins is None:  # a direct caller keeps the persists unowned
-        pins = Pins()
     mh = F.xxhash64(F.col("doc_id"))
     # bands feeds TWO subtrees (the bucket-class aggregate and the members
     # join) and sets feeds two more (members and the verify's representative

@@ -892,28 +892,14 @@ GROUP BY a.anchor_id"""
 
 
 # ---------------------------------------------------------------------------
-# rel_bucketed_join — co-located fact-to-fact join: per-order line rollup
-# joining lineitem to orders on the order key. When the bucketed layout is
-# materialized in the session catalog (catalog.materialize_bucketed — tests
-# and deployments do; the driver's stateless correctness run does not), both
-# scans are bucketed+sorted by the key, so the SortMergeJoin AND the
-# orderkey groupBy run with ZERO shuffle Exchange (pinned in test_plans).
-# Without it the op falls back to the identical plain-parquet join — same
-# rows, Catalyst shuffles as usual. Result values are layout-independent,
-# so one oracle covers both paths.
+# rel_bucketed_join — fact-to-fact join: per-order line rollup joining
+# lineitem to orders on the order key, over the plain parquet tables.
 # ---------------------------------------------------------------------------
 
 
 def rel_bucketed_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    from ..sources import catalog as _cat
-
-    li_name = _cat.bucketed_name("lineitem", sf_dir)
-    o_name = _cat.bucketed_name("orders", sf_dir)
-    if spark.catalog.tableExists(li_name) and spark.catalog.tableExists(o_name):
-        li, o = spark.table(li_name), spark.table(o_name)
-    else:
-        li = load_table(spark, "lineitem", sf_dir)
-        o = load_table(spark, "orders", sf_dir)
+    li = load_table(spark, "lineitem", sf_dir)
+    o = load_table(spark, "orders", sf_dir)
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("l_orderkey", "o_orderpriority")

@@ -5,7 +5,6 @@ from .catalog import (
     register_sales_view,
     register_tables,
     sales_df,
-    table,
 )
 
 __all__ = [
@@ -15,5 +14,4 @@ __all__ = [
     "register_sales_view",
     "register_tables",
     "sales_df",
-    "table",
 ]

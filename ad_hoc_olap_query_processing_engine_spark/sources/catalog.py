@@ -127,11 +127,6 @@ def register_sales_view(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> No
     spark.sql(f"CREATE OR REPLACE TEMP VIEW sales AS {SALES_VIEW_SQL}")
 
 
-def table(spark: SparkSession, name: str, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
-    """Read one driver table directly (no view registration side effects)."""
-    return load_table(spark, name, sf_dir)
-
-
 def sales_df(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> DataFrame:
     """The ``sales`` relation as a DataFrame.
 
@@ -178,62 +173,6 @@ def _sales_cache_dir(sf_dir: str) -> str:
         mtime = "0"
     sig = hashlib.md5(f"{os.path.abspath(sf_dir)}:{mtime}".encode()).hexdigest()[:12]
     return os.path.join(tempfile.gettempdir(), f"spark_graft_sales_{sig}")
-
-
-# ---------------------------------------------------------------------------
-# Bucketed fact-table layout (co-located joins, the second documented layout
-# optimization). Writing lineitem and orders bucketed AND sorted by the order
-# key makes every orderkey-equi-join between them — and any orderkey groupBy
-# downstream of it — shuffle-free: both scans report the same
-# hashpartitioning, so Catalyst plans SortMergeJoin with ZERO Exchange. At
-# 100 TB this is the difference between re-shuffling two fact tables per
-# query and never shuffling them at all; bucket count there would be sized
-# ~128 MB/bucket-file (thousands), 8 here so tiny SFs still fill buckets.
-# Bucketed tables live in the session catalog (saveAsTable), so consumers
-# fall back to the identical plain-parquet join when they're absent — same
-# rows either way, which keeps the driver's vanilla-session correctness runs
-# on the stateless path.
-# ---------------------------------------------------------------------------
-
-N_BUCKETS = 8
-BUCKET_TABLES = {"lineitem": "l_orderkey", "orders": "o_orderkey"}
-
-
-def bucketed_name(base: str, sf_dir: str) -> str:
-    sig = hashlib.md5(os.path.abspath(sf_dir).encode()).hexdigest()[:8]
-    return f"{base}_bkt_{sig}"
-
-
-def materialize_bucketed(spark: SparkSession, sf_dir: str = DEFAULT_SF_DIR) -> dict[str, str]:
-    """Write the order-keyed fact tables bucketed+sorted by the join key,
-    once per session (idempotent via tableExists). Returns base→table name."""
-    names: dict[str, str] = {}
-    for base, key in BUCKET_TABLES.items():
-        name = bucketed_name(base, sf_dir)
-        if not spark.catalog.tableExists(name):
-            # the in-memory catalog forgets tables across sessions but the
-            # warehouse directory survives; clear the stale location (it's a
-            # derived cache) or saveAsTable raises LOCATION_ALREADY_EXISTS
-            loc = os.path.join(
-                spark.conf.get(
-                    "spark.sql.warehouse.dir", "spark-warehouse"
-                ).removeprefix("file:"),
-                name,
-            )
-            if os.path.exists(loc):
-                import shutil
-
-                shutil.rmtree(loc, ignore_errors=True)
-            (
-                load_table(spark, base, sf_dir)
-                .write.mode("overwrite")
-                .format("parquet")
-                .bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .saveAsTable(name)
-            )
-        names[base] = name
-    return names
 
 
 def materialize_sales(

@@ -4,9 +4,8 @@ NOT-IN-REFERENCE; the reference is strictly batch).
 Each operator builds a genuine ``readStream`` pipeline (file source over the
 driver parquet, watermark, windowed aggregation), drains it synchronously
 through a memory sink (``processAllAvailable`` — the standard local-test
-harness), and returns the result table. The same aggregations are also
-exposed as batch builders so tests can assert stream/batch parity, and the
-tumbling aggregate is oracle-checked against DuckDB epoch arithmetic.
+harness), and returns the result table. The tumbling aggregate is
+oracle-checked against DuckDB epoch arithmetic.
 
 Window starts are emitted as epoch seconds (BIGINT) — engine-neutral, no
 timestamp-type mismatches with the oracle.
@@ -151,24 +150,6 @@ SELECT CAST(FLOOR(epoch(ts) / 86400) * 86400 AS BIGINT)  AS window_start,
        CAST(SUM(CAST(value AS DECIMAL(18,6))) AS DOUBLE) AS sum_value
 FROM events
 GROUP BY 1, 2"""
-
-
-def batch_tumbling(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of stream_tumbling (stream/batch parity testing)."""
-    ev = load_table(spark, "events", sf_dir)
-    return (
-        ev.groupBy(F.window("ts", "1 day").alias("w"), "event_type")
-        .agg(
-            F.count(F.lit(1)).alias("n_events"),
-            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
-        )
-        .select(
-            F.col("w.start").cast("long").alias("window_start"),
-            "event_type",
-            "n_events",
-            "sum_value",
-        )
-    )
 
 
 # ---------------------------------------------------------------------------

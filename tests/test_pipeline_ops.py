@@ -37,8 +37,10 @@ def test_ngram_jaccard_stop_shingle_cap(spark):
     docs = spark.createDataFrame(
         [(i, f"h1 h2 h3 h4 u{i}") for i in range(30)], "doc_id long, text string"
     )
-    uncapped = dedup.ngram_jaccard_pairs(docs, df_cap=10**9).count()
-    capped = dedup.ngram_jaccard_pairs(docs, df_cap=10).count()
+    # the registered query's kernel: capped postings → overlap pairs
+    sh = dedup._shingles(docs)
+    uncapped = dedup._overlap_from_capped(dedup._capped(sh, df_cap=10**9)).count()
+    capped = dedup._overlap_from_capped(dedup._capped(sh, df_cap=10)).count()
     assert uncapped == 30 * 29 // 2
     assert capped == 0
 
@@ -219,9 +221,27 @@ def test_mm_feature_extract_shape_and_determinism(spark):
 
 
 def test_stream_batch_parity_tumbling(spark):
+    """The streamed tumbling aggregate equals Spark's batch aggregate over the
+    same events and the same ``window()`` (the DuckDB oracle test checks
+    the epoch arithmetic; this one checks the streaming engine)."""
+    from ad_hoc_olap_query_processing_engine_spark.sources.catalog import load_table
+
     streamed = windows.stream_tumbling(spark, SF_SMALL).toPandas()
-    batch = windows.batch_tumbling(spark, SF_SMALL).toPandas()
-    assert_frames_match(streamed, batch)
+    batch = (
+        load_table(spark, "events", SF_SMALL)
+        .groupBy(F.window("ts", "1 day").alias("w"), "event_type")
+        .agg(
+            F.count(F.lit(1)).alias("n_events"),
+            F.sum(F.col("value").cast("decimal(18,6)")).cast("double").alias("sum_value"),
+        )
+        .select(
+            F.col("w.start").cast("long").alias("window_start"),
+            "event_type",
+            "n_events",
+            "sum_value",
+        )
+    )
+    assert_frames_match(streamed, batch.toPandas())
 
 
 def test_ivf_ann_subset_of_brute(spark):
@@ -332,19 +352,6 @@ def test_vocab_ids_are_dense_and_partition_safe(spark):
     assert keys == sorted(keys), "id order must be (bucket, n DESC, token)"
 
     assert "SinglePartition" not in physical_plan(df)
-
-
-def test_bucketed_join_layout_is_value_identical(spark):
-    """The bucketed layout changes the plan, never the rows: the bucketed-
-    table path must produce exactly the plain-parquet path's result."""
-    from ad_hoc_olap_query_processing_engine_spark.operators import relational
-    from ad_hoc_olap_query_processing_engine_spark.sources import catalog
-
-    plain = relational.rel_bucketed_join(spark, SF_SMALL).toPandas()
-    catalog.materialize_bucketed(spark, SF_SMALL)
-    assert spark.catalog.tableExists(catalog.bucketed_name("lineitem", SF_SMALL))
-    bucketed = relational.rel_bucketed_join(spark, SF_SMALL).toPandas()
-    assert_frames_match(bucketed, plain)
 
 
 def test_connected_components_long_path_converges_logarithmically(spark):

@@ -136,27 +136,6 @@ def test_range_bucket_join_is_equi_not_nested_loop(spark):
     assert "CartesianProduct" not in plan
 
 
-def test_bucketed_join_has_zero_shuffle(spark):
-    """With the bucketed layout materialized, the orderkey join AND the
-    orderkey groupBy must plan with no shuffle Exchange at all — both scans
-    already report the same hashpartitioning. (Broadcast disabled so the
-    canonical co-located SortMergeJoin is what's pinned, not a small-SF
-    broadcast special case.)"""
-    catalog.materialize_bucketed(spark, SF_SMALL)
-    old = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = physical_plan(relational.rel_bucketed_join(spark, SF_SMALL))
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old)
-    assert "SortMergeJoin" in plan
-    # no Exchange NODE of any kind (formatted mode separates the node name
-    # from its partitioning arguments, so match the node lines themselves)
-    import re
-
-    assert not re.findall(r"\(\d+\) \w*Exchange\b", plan)
-
-
 def test_fact_window_phi_query_scans_fact_table_once(spark, sales):
     """phi_q9's below-own-average GVs take FACT_WINDOW: the group-0 average
     attaches per fact row via a partitionBy(V) window sharing the scan-0

@@ -17,7 +17,7 @@ injectivity.
 
 from __future__ import annotations
 
-from pyspark.sql import functions as F
+import pytest
 
 from ad_hoc_olap_query_processing_engine_spark.operators.dedup import (
     LSH_BUCKET_WINDOW,
@@ -25,6 +25,15 @@ from ad_hoc_olap_query_processing_engine_spark.operators.dedup import (
     _verify_candidates,
     minhash_pairs,
 )
+from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import Pins
+
+
+@pytest.fixture
+def pins():
+    """Owner of the big path's DISK_ONLY persists, released after the test."""
+    p = Pins()
+    yield p
+    p.release()
 
 
 def _windowed_pairs(ids: list[int], w: int = LSH_BUCKET_WINDOW) -> set[tuple[int, int]]:
@@ -38,14 +47,14 @@ def _windowed_pairs(ids: list[int], w: int = LSH_BUCKET_WINDOW) -> set[tuple[int
     }
 
 
-def test_minhash_mega_bucket_windowed_pairs_exact(spark):
+def test_minhash_mega_bucket_windowed_pairs_exact(spark, pins):
     """A 200-clone group (>> LSH_BUCKET_WINDOW) — the mega-bucket shape the
     O(1) membership digest exists for — must emit exactly the windowed pair
     set, all verified at Jaccard 1, plus the full clique of a small group."""
     mega = [(i, "the quick brown fox jumps over the lazy dog") for i in range(1, 201)]
     small = [(1000 + i, "entirely different words appear in this one") for i in range(5)]
     docs = spark.createDataFrame(mega + small, ["doc_id", "text"])
-    got = minhash_pairs(_shingles(docs)).collect()
+    got = minhash_pairs(_shingles(docs), pins).collect()
 
     expected = _windowed_pairs([i for i, _ in mega]) | _windowed_pairs(
         [i for i, _ in small]
@@ -54,7 +63,7 @@ def test_minhash_mega_bucket_windowed_pairs_exact(spark):
     assert all(r.jaccard == 1.0 for r in got)  # clones: exact Jaccard 1
 
 
-def test_bucket_class_digest_separates_distinct_memberships(spark):
+def test_bucket_class_digest_separates_distinct_memberships(spark, pins):
     """Two clone groups whose buckets differ ONLY in membership must stay
     distinct bucket classes: each group's windowed pairs appear, and no
     cross-group pair leaks (a digest collision would merge the classes and
@@ -62,7 +71,7 @@ def test_bucket_class_digest_separates_distinct_memberships(spark):
     g1 = [(i, "alpha beta gamma delta epsilon zeta") for i in range(1, 4)]
     g2 = [(100 + i, "one two three four five six seven") for i in range(1, 5)]
     docs = spark.createDataFrame(g1 + g2, ["doc_id", "text"])
-    got = {(r.doc_a, r.doc_b) for r in minhash_pairs(_shingles(docs)).collect()}
+    got = {(r.doc_a, r.doc_b) for r in minhash_pairs(_shingles(docs), pins).collect()}
     assert got == _windowed_pairs([i for i, _ in g1]) | _windowed_pairs(
         [i for i, _ in g2]
     )
@@ -83,7 +92,7 @@ def test_set_fingerprint_injective_on_separator_shingles(spark):
     assert got == []  # disjoint sets: Jaccard 0, below threshold
 
 
-def test_minhash_small_and_big_paths_agree(spark):
+def test_minhash_small_and_big_paths_agree(spark, pins):
     """``big`` selects the physical shape only: the one-shot small-corpus
     plan and the canonicalized/persisted big-corpus plan must emit the same
     (doc_a, doc_b, jaccard) rows on a mixed fixture (clone groups of
@@ -94,8 +103,8 @@ def test_minhash_small_and_big_paths_agree(spark):
         + [(200 + i, f"unique document number {i} with its own words") for i in range(5)]
     )
     sh = _shingles(spark.createDataFrame(docs, ["doc_id", "text"]))
-    small = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_pairs(sh, big=False).collect()}
-    bigp = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_pairs(sh, big=True).collect()}
+    small = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_pairs(sh, pins, big=False).collect()}
+    bigp = {(r.doc_a, r.doc_b, r.jaccard) for r in minhash_pairs(sh, pins, big=True).collect()}
     assert small == bigp
     assert small  # non-degenerate fixture
 

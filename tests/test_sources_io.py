@@ -1,5 +1,6 @@
-"""Source/sink round-trips: every supported format must write and re-read
-the same rows; partitioned writes must prune on the partition key."""
+"""Sources and sinks: partitioned writes must prune on the partition key,
+the Python data sources must match the native readers, and the JDBC source
+must push filters down."""
 
 from __future__ import annotations
 
@@ -20,68 +21,20 @@ def nation_df(spark):
     return catalog.load_table(spark, "nation", SF_SMALL)
 
 
-@pytest.mark.parametrize("fmt", io.FORMATS)
-def test_round_trip(fmt, spark, nation_df):
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, f"nation_{fmt}")
-        io.write_table(nation_df, path, fmt=fmt)
-        back = io.read_table(spark, path, fmt=fmt, schema=nation_df.schema)
-        assert_frames_match(back.toPandas(), nation_df.toPandas())
-
-
 def test_partitioned_write_prunes(spark):
     orders = catalog.load_table(spark, "orders", SF_SMALL).withColumn(
         "yr", F.year("o_orderdate")
     )
     with tempfile.TemporaryDirectory() as tmp:
         path = os.path.join(tmp, "orders_part")
-        io.write_table(orders, path, fmt="parquet", partition_by=["yr"])
-        back = io.read_table(spark, path, fmt="parquet")
+        orders.write.partitionBy("yr").parquet(path)
+        back = spark.read.parquet(path)
         one_year = back.filter(F.col("yr") == 1997)
         assert one_year.count() == orders.filter(F.col("yr") == 1997).count()
         # partition pruning: the scan must only touch the yr=1997 directory
         plan = physical_plan(one_year)
         assert "PartitionFilters" in plan and "1997" in plan
 
-
-def test_csv_without_schema_still_reads(spark, nation_df):
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "nation_csv")
-        io.write_table(nation_df, path, fmt="csv")
-        back = io.read_table(spark, path, fmt="csv")
-        assert back.count() == nation_df.count()
-
-
-def test_text_and_binary_file_sources(spark):
-    """Corpus round-trip through the raw-ingestion sources: text lines come
-    back line-exact, and binaryFile sees the same bytes the text writer put
-    down (the multimodal tier's real input shape)."""
-    with tempfile.TemporaryDirectory() as tmp:
-        path = os.path.join(tmp, "corpus_txt")
-        docs = spark.createDataFrame(
-            [("alpha beta",), ("gamma",), ("delta epsilon zeta",)], "value string"
-        )
-        docs.coalesce(1).write.mode("overwrite").text(path)
-        lines = io.read_text_lines(spark, path)
-        assert sorted(r.value for r in lines.collect()) == [
-            "alpha beta",
-            "delta epsilon zeta",
-            "gamma",
-        ]
-        blobs = io.read_binary_files(spark, path, glob="*.txt")
-        rows = blobs.select("length", "content").collect()
-        assert len(rows) == 1  # one part file
-        text = bytes(rows[0].content).decode()
-        assert sorted(text.strip().splitlines()) == [
-            "alpha beta",
-            "delta epsilon zeta",
-            "gamma",
-        ]
-        assert rows[0].length == len(rows[0].content)
-
-
-def test_lakehouse_formats_degrade_cleanly(spark):
-    assert io.lakehouse_available(spark, "delta") in (True, False)
 
 def test_materialized_sales_matches_view(spark, monkeypatch):
     """The SALES_CACHE layout optimization must be row-identical to the live
@@ -274,8 +227,8 @@ def test_dynamic_partition_pruning_from_dim_filter(spark):
     )
     with tempfile.TemporaryDirectory() as tmp:
         path = os.path.join(tmp, "orders_dpp")
-        io.write_table(orders, path, fmt="parquet", partition_by=["yr"])
-        fact = io.read_table(spark, path, fmt="parquet")
+        orders.write.partitionBy("yr").parquet(path)
+        fact = spark.read.parquet(path)
         # the selective filter must sit on NON-key columns of another table:
         # a literal predicate on yr itself would propagate through the
         # equi-join as a static partition filter and DPP would never fire
@@ -397,42 +350,3 @@ def test_parquet_compression_codec_roundtrip(spark, tmp_path):
             F.bit_xor(F.xxhash64(*sorted(back.columns))).alias("h")
         ).collect()[0].h
         assert digest == digest_src, codec
-
-
-def test_dynamic_partition_overwrite_replaces_only_touched_partitions(spark, tmp_path):
-    """overwrite_partitions certifies the backfill write path: rewriting ONE
-    day's partition must replace exactly that directory — siblings keep
-    their bytes, the rerun doesn't append-duplicate, and the session's
-    overwrite mode is restored afterwards."""
-    from pyspark.sql import functions as F
-
-    from ad_hoc_olap_query_processing_engine_spark.sources.io import (
-        overwrite_partitions,
-        write_table,
-    )
-
-    path = str(tmp_path / "events_by_day")
-    base = spark.createDataFrame(
-        [(d, i, d * 100 + i) for d in (1, 2, 3) for i in range(4)],
-        "day INT, k INT, v INT",
-    )
-    write_table(base, path, partition_by=["day"])
-
-    # recompute day 2 with DIFFERENT content (2 rows instead of 4)
-    fixed = spark.createDataFrame([(2, 0, 999), (2, 1, 998)], "day INT, k INT, v INT")
-    before_mode = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-    overwrite_partitions(spark, fixed, path, ["day"])
-    assert (
-        spark.conf.get("spark.sql.sources.partitionOverwriteMode", "STATIC")
-        == before_mode
-    )
-
-    got = spark.read.parquet(path)
-    assert got.filter(F.col("day") == 2).count() == 2  # replaced, not appended
-    assert sorted(
-        r.v for r in got.filter(F.col("day") == 2).collect()
-    ) == [998, 999]
-    for d in (1, 3):  # siblings untouched
-        assert sorted(r.v for r in got.filter(F.col("day") == d).collect()) == [
-            d * 100 + i for i in range(4)
-        ]

@@ -1,125 +1,7 @@
-"""foreachBatch exactly-once sink: idempotent per-batch overwrite + offset
-checkpointing. Asserts the two halves of the effectively-exactly-once
-contract: (1) a restarted query with an intact checkpoint reprocesses
-NOTHING; (2) re-running a batch (fresh checkpoint, same sink dir) overwrites
-its own output instead of duplicating it."""
+"""Streaming-adjacent sinks and gates: the transformWithState registration
+gate and the pyjsonl sink's two-phase commit under a failing task."""
 
 from __future__ import annotations
-
-import os
-
-from ad_hoc_olap_query_processing_engine_spark.sources import catalog
-from ad_hoc_olap_query_processing_engine_spark.streaming import windows as SW
-from ad_hoc_olap_query_processing_engine_spark.streaming.sinks import (
-    foreach_batch_parquet_sink,
-    read_batches,
-)
-
-from .conftest import SF_SMALL
-
-
-def _drain_sink(spark, out_dir, ckpt_dir):
-    stream = SW._events_stream(spark, SF_SMALL).select("event_id", "user_id")
-    q = foreach_batch_parquet_sink(stream, out_dir, ckpt_dir)
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def test_foreach_batch_sink_exactly_once(spark, tmp_path):
-    out = str(tmp_path / "landed")
-    ckpt = str(tmp_path / "ckpt")
-    n_src = catalog.load_table(spark, "events", SF_SMALL).count()
-
-    _drain_sink(spark, out, ckpt)
-    first = read_batches(spark, out)
-    assert first.count() == n_src
-    assert first.select("event_id").distinct().count() == n_src
-    batches_after_first = set(
-        r[0] for r in first.select("batch_id").distinct().collect()
-    )
-
-    # (1) restart with the SAME checkpoint: offsets are committed, so the
-    # source has nothing new — no batch runs, output unchanged
-    _drain_sink(spark, out, ckpt)
-    again = read_batches(spark, out)
-    assert again.count() == n_src
-
-    # (2) fresh checkpoint, same sink dir = the redelivery case: every batch
-    # re-runs, but per-batch overwrite keeps the output duplicate-free
-    _drain_sink(spark, out, str(tmp_path / "ckpt2"))
-    redelivered = read_batches(spark, out)
-    assert redelivered.count() == n_src
-    assert redelivered.select("event_id").distinct().count() == n_src
-    assert (
-        set(r[0] for r in redelivered.select("batch_id").distinct().collect())
-        == batches_after_first
-    )
-    assert os.path.isdir(out)
-
-
-def test_foreach_batch_crash_between_write_and_commit(spark, tmp_path):
-    """Fault injection in the two-phase-commit GAP (round-7 verdict ask):
-    the batch's parquet write lands, then the query dies BEFORE Spark commits
-    the batch's offsets.  Contract: (a) the crash is visible as a query
-    failure, not silent; (b) a restart on the same checkpoint REDELIVERS the
-    uncommitted batch under the SAME batch_id (offset WAL), and the
-    idempotent per-batch overwrite leaves the final output complete and
-    duplicate-free — no partial visibility at any point."""
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    src = tmp_path / "src"
-    src.mkdir()
-    for i in range(3):
-        pq.write_table(
-            pa.table({"event_id": list(range(i * 10, (i + 1) * 10))}),
-            str(src / f"f{i}.parquet"),
-        )
-    stream = (
-        spark.readStream.schema("event_id long")
-        .option("maxFilesPerTrigger", "1")
-        .parquet(str(src))
-    )
-    out = str(tmp_path / "landed")
-    ckpt = str(tmp_path / "ckpt")
-
-    crashes = []
-
-    def crash_once(batch_id: int) -> None:
-        if batch_id == 1 and not crashes:
-            crashes.append(batch_id)
-            raise RuntimeError("injected crash between write and offset commit")
-
-    q = foreach_batch_parquet_sink(stream, out, ckpt, on_batch=crash_once)
-    import pytest
-
-    with pytest.raises(Exception, match="injected crash"):
-        try:
-            q.processAllAvailable()
-        finally:
-            q.stop()
-    assert crashes == [1]
-    # batch 1's WRITE landed (its dir is committed parquet) but its offsets
-    # did not — the exact mid-gap state
-    assert os.path.isfile(os.path.join(out, "batch_id=1", "_SUCCESS"))
-
-    # restart on the same checkpoint, no fault: batch 1 redelivers under the
-    # same id, batch 2 follows; nothing is lost, nothing duplicated
-    q2 = foreach_batch_parquet_sink(stream, out, ckpt)
-    try:
-        q2.processAllAvailable()
-    finally:
-        q2.stop()
-    final = read_batches(spark, out)
-    assert final.count() == 30
-    assert final.select("event_id").distinct().count() == 30
-    assert set(r[0] for r in final.select("batch_id").distinct().collect()) == {
-        0,
-        1,
-        2,
-    }
 
 
 def test_tws_extremes_gated_on_protobuf(spark):
