@@ -41,16 +41,10 @@ from __future__ import annotations
 
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.storagelevel import StorageLevel
 
 from ..sources.catalog import load_table
-from .iterutil import (
-    Pins,
-    disk_checkpoint,
-    footer_rows,
-    reclaim_shuffles,
-    truncated_checkpoint,
-    work_partitions,
-)
+from .iterutil import Pins, checkpoint, footer_rows, reclaim_shuffles, work_partitions
 from .registry import register
 from .session_cache import session_cached
 
@@ -160,7 +154,7 @@ def _checkpointed_pairs(sh: DataFrame, big: bool) -> DataFrame:
     (ADVICE r11 — the direct-call path leaked a corpus-sized disk persist
     per invocation)."""
     pins = Pins()
-    out = disk_checkpoint(minhash_pairs(sh, pins, big=big))
+    out = checkpoint(minhash_pairs(sh, pins, big=big), disk=True)
     pins.release()
     return out
 
@@ -389,7 +383,7 @@ def pair_overlap_table(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         sh = _capped(shingle_postings(spark, sf_dir)).persist()
-        out = disk_checkpoint(_overlap_from_capped(sh))  # eager materialize
+        out = checkpoint(_overlap_from_capped(sh), disk=True)  # eager materialize
         # the capped-posting persist only served this build; free it
         sh.unpersist()
         return out
@@ -856,7 +850,7 @@ register("dedup_simhash", dedup_simhash, _simhash_sql())
 
 # Safety cap, not the expected round count: the loop breaks on convergence
 # (empty improving-offer set), so extra headroom is free — and with
-# truncated_checkpoint each round costs the same (the old nested-metadata
+# truncated checkpoints each round costs the same (the old nested-metadata
 # blowup made late rounds exponentially slow, which hid that a shuffled
 # 60-node PATH graph needs ~18 rounds, over the old cap of 16).  Real
 # near-dup components are dense (every pair passed a Jaccard threshold) and
@@ -882,7 +876,8 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
     # DISK_ONLY: the pair list is read twice (forward/reverse union) and
     # never again; memory-resident blocks would only steal execution memory
     # from the loop's joins (sf100 lesson — see verified_minhash_pairs)
-    p = disk_checkpoint(pairs)
+    pins = Pins()  # the loop's state; only the returned labels outlive it
+    p = pins.checkpoint(pairs, disk=True)
     # the (possibly huge) pair-building pipeline is now materialized; its
     # shuffle files are dead weight for the whole iteration — reclaim them
     reclaim_shuffles(p)
@@ -913,15 +908,16 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
     # list per round.  At sf100 (320M symmetric edges) the per-round edge
     # shuffle was the disk-spill driver (ENOSPC, found by the probe); here
     # it becomes a one-time build cost.
-    sym = (
+    sym = pins.persist(
         e.union(e.select(F.col("v").alias("u"), F.col("u").alias("v")))
-        .repartition(n_loop, "v")
-        .persist()
+        .repartition(n_loop, "v"),
+        StorageLevel.MEMORY_AND_DISK_DESER,
     )
-    lab = truncated_checkpoint(
+    lab = pins.checkpoint(
         sym.groupBy("u")
         .agg(F.min("v").alias("mn"))
-        .select("u", F.least(F.col("u"), F.col("mn")).alias("l"))
+        .select("u", F.least(F.col("u"), F.col("mn")).alias("l")),
+        truncate=True,
     )
     # FRONTIER shrink (round-9 verdict ask #6): labels are monotone
     # non-increasing, so once a full first round has offered every node's
@@ -934,7 +930,7 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
     # frontier collapses to the few long chain tails after round 1.
     #
     # PER-ROUND frontier-sized planning (round-12, verdict ask #2): the
-    # frontier/offer tables come out of truncated_checkpoint as bare
+    # frontier/offer tables come out of truncated checkpoints as bare
     # LogicalRDDs whose size Catalyst does NOT know — it defaults them huge
     # and plans the round's edge join as a full sort-merge, re-sorting the
     # corpus-scale edge list EVERY round (320M rows/round at sf100 — the
@@ -959,8 +955,8 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
         # prop is checkpointed (≤ node-sized): the convergence check AND the
         # merge both read it, so the round's neighbor join runs ONCE instead
         # of twice (check, then again under the merge's checkpoint)
-        prop = truncated_checkpoint(
-            sym.join(nbr, "v").groupBy("u").agg(F.min("nl").alias("pl"))
+        prop = pins.checkpoint(
+            sym.join(nbr, "v").groupBy("u").agg(F.min("nl").alias("pl")), truncate=True
         )
         n_prop = prop.count()  # materialized by the checkpoint: cheap scan
         if n_prop == 0:
@@ -988,19 +984,21 @@ def connected_components(pairs: DataFrame, max_rounds: int = CC_MAX_ROUNDS) -> D
                 "u",
                 F.least(F.col("l"), F.coalesce(F.col("pl2"), F.col("l"))).alias("l"),
             )
-        new_lab = truncated_checkpoint(step)
+        new_lab = pins.checkpoint(step, truncate=True)
         # next round's frontier: nodes whose label changed this round —
         # by offer OR by jump (a jump-induced change must re-offer too)
-        frontier = truncated_checkpoint(
+        frontier = pins.checkpoint(
             new_lab.alias("n")
             .join(lab.alias("o"), "u")
             .filter(F.col("n.l") < F.col("o.l"))
-            .select("u", F.col("n.l").alias("l"))
+            .select("u", F.col("n.l").alias("l")),
+            truncate=True,
         )
         lab = new_lab
+        pins.release(p, sym, lab, frontier)  # the old labels, frontier, offers
         n_front = frontier.count()  # materialized: cheap; sizes next round
         reclaim_shuffles(lab)  # each round's finished shuffles are garbage
-    sym.unpersist()  # labels are checkpointed; the edge cache served only the loop
+    pins.release(lab)  # the caller owns the labels; the rest served only the loop
     return lab.select(F.col("u").alias("doc_id"), F.col("l").alias("cluster_id"))
 
 
@@ -1009,7 +1007,7 @@ def cc_labels(spark: SparkSession, sf_dir: str) -> DataFrame:
     pair graph — the family's third maintained artifact (pair table →
     clusters → every consumer: cluster listing, survivorship election,
     corpus filter).  The loop's final label table is already materialized
-    by truncated_checkpoint, so caching it costs nothing beyond the
+    by a truncated checkpoint, so caching it costs nothing beyond the
     reference; without it each consumer re-ran the whole iterative loop
     (at sf100: ~3 runs × ~20 rounds of joins over a 320M-edge graph)."""
     return session_cached(

@@ -33,7 +33,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
-from .iterutil import work_partitions
+from .iterutil import generation, work_partitions
 from .registry import register
 from .session_cache import session_cached
 
@@ -93,9 +93,10 @@ def graph_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # overlap; on a quiet host r13 measured the same flip a wash.  On a
     # saturated production cluster the duplicate work is pure waste, so
     # the checkpoint is the scale-correct default.
-    deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
+    with generation("graph_pagerank") as pins:
+        deg = edges.groupBy("src").agg(F.count(F.lit(1)).alias("deg")).transform(
+            pins.checkpoint, eager=False
+        )
     ranks = deg.select(F.col("src").alias("node"), F.lit(PR_INIT).cast("bigint").alias("r"))
     for _ in range(PR_ROUNDS):
         # integer DIV throughout — a double division would silently round
@@ -303,36 +304,37 @@ def graph_bfs_layers(spark: SparkSession, sf_dir: str) -> DataFrame:
     # stays linear in the fixed round count and nothing re-derives.  The
     # dropped per-round dist checkpoints were pure construction cost
     # (interleaved A/B at sf0.1: 3.1-3.9 → 3.0-3.1 s, identical layers).
-    dist = seeds.withColumn("dist", F.lit(0)).localCheckpoint(eager=False)
-    frontier = seeds
-    for k in range(1, BFS_ROUNDS + 1):
-        # frontier and label table are node-sized (≪ edges for this catalog
-        # graph: 16k nodes vs 1.6M directed edges at sf0.1), so broadcast
-        # both — each round is then a map-only pass over the persisted edge
-        # partitions plus one node-sized distinct. On a general graph whose
-        # frontier can approach |V|, drop the hints and let AQE choose.
-        reached = (
-            edges.join(F.broadcast(frontier), edges.src == frontier.node)
-            .select(F.col("dst").alias("node"))
-            .distinct()
-        )
-        # localCheckpoint per round (same contract as dedup_cluster_cc's
-        # label propagation): without it the round-k frontier's lineage
-        # re-evaluates every earlier round each time it's referenced — the
-        # anti-join target AND the next expansion both read it, so the plan
-        # grows multiplicatively (measured at sf0.1: 10.3 s → 4.7 s after
-        # the edge build with checkpoint + broadcast, 2.2 s warm).  LAZY
-        # (round 13): truncation happens at call time either way; eager's
-        # per-round blocking count() serialized the walk into 7 jobs —
-        # lazy runs it as one (1.3-1.6 → 1.2 s warm, identical layers; the
-        # round count is fixed, so no driver branch needs the counts).
-        fresh = (
-            reached.join(F.broadcast(dist.select("node")), "node", "left_anti")
-            .withColumn("dist", F.lit(k))
-            .localCheckpoint(eager=False)
-        )
-        dist = dist.unionByName(fresh)
-        frontier = fresh.select("node")
+    with generation("graph_bfs_layers") as pins:
+        dist = seeds.withColumn("dist", F.lit(0)).transform(pins.checkpoint, eager=False)
+        frontier = seeds
+        for k in range(1, BFS_ROUNDS + 1):
+            # frontier and label table are node-sized (≪ edges for this catalog
+            # graph: 16k nodes vs 1.6M directed edges at sf0.1), so broadcast
+            # both — each round is then a map-only pass over the persisted edge
+            # partitions plus one node-sized distinct. On a general graph whose
+            # frontier can approach |V|, drop the hints and let AQE choose.
+            reached = (
+                edges.join(F.broadcast(frontier), edges.src == frontier.node)
+                .select(F.col("dst").alias("node"))
+                .distinct()
+            )
+            # localCheckpoint per round (same contract as dedup_cluster_cc's
+            # label propagation): without it the round-k frontier's lineage
+            # re-evaluates every earlier round each time it's referenced — the
+            # anti-join target AND the next expansion both read it, so the plan
+            # grows multiplicatively (measured at sf0.1: 10.3 s → 4.7 s after
+            # the edge build with checkpoint + broadcast, 2.2 s warm).  LAZY
+            # (round 13): truncation happens at call time either way; eager's
+            # per-round blocking count() serialized the walk into 7 jobs —
+            # lazy runs it as one (1.3-1.6 → 1.2 s warm, identical layers; the
+            # round count is fixed, so no driver branch needs the counts).
+            fresh = (
+                reached.join(F.broadcast(dist.select("node")), "node", "left_anti")
+                .withColumn("dist", F.lit(k))
+                .transform(pins.checkpoint, eager=False)
+            )
+            dist = dist.unionByName(fresh)
+            frontier = fresh.select("node")
     return dist.groupBy("dist").agg(
         F.count(F.lit(1)).alias("n_nodes"),
         F.min("node").alias("first_node"),
@@ -451,7 +453,7 @@ KCORE_ROUNDS = 4
 def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     # Round 13: every per-round localCheckpoint here is LAZY (eager=False).
     # The plan truncation — the reason the checkpoints exist (lineage stays
-    # O(1) over rounds) — happens at .localCheckpoint() call time in both
+    # O(1) over rounds) — happens when the checkpoint is called, in both
     # modes; eager=True additionally runs a blocking count() job per call,
     # which serialized this loop into ~8 driver-side jobs.  Lazy, the whole
     # peel executes as ONE job at the final action, each intermediate RDD
@@ -477,49 +479,50 @@ def graph_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     n_edges = edges.count()
     session_parts = int(spark.conf.get("spark.sql.shuffle.partitions"))
     n_work = work_partitions(2 * n_edges, 24, session_parts)
-    cur = (
-        edges.select("a", "b")
-        .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
-        .coalesce(n_work)
-        .localCheckpoint(eager=False)
-    )
-    trace = None
-    for r in range(1, KCORE_ROUNDS + 1):
-        # deg is checkpointed (node-sized, tiny): the trace row AND the weak
-        # set both read it, so the heavy per-round degree aggregate runs
-        # ONCE — without this the trace rows re-derive every round's degrees
-        # from the edge checkpoints at collect time (measured ~2× the agg
-        # work at sf0.1)
-        deg = (
-            cur.groupBy("a")
-            .agg(F.count(F.lit(1)).alias("deg"))
-            .localCheckpoint(eager=False)
+    with generation("graph_kcore") as pins:
+        cur = (
+            edges.select("a", "b")
+            .unionByName(edges.select(F.col("b").alias("a"), F.col("a").alias("b")))
+            .coalesce(n_work)
+            .transform(pins.checkpoint, eager=False)
         )
-        # COALESCE: once the graph peels empty, SUM over the empty degree
-        # table is NULL — the trace contract promises 0 rows, not NULLs
-        row = deg.agg(
-            F.coalesce(
-                F.sum(F.when(F.col("deg") < KCORE_K, 1).otherwise(0)), F.lit(0)
+        trace = None
+        for r in range(1, KCORE_ROUNDS + 1):
+            # deg is checkpointed (node-sized, tiny): the trace row AND the weak
+            # set both read it, so the heavy per-round degree aggregate runs
+            # ONCE — without this the trace rows re-derive every round's degrees
+            # from the edge checkpoints at collect time (measured ~2× the agg
+            # work at sf0.1)
+            deg = (
+                cur.groupBy("a")
+                .agg(F.count(F.lit(1)).alias("deg"))
+                .transform(pins.checkpoint, eager=False)
             )
-            .cast("bigint")
-            .alias("n_removed"),
-            F.coalesce(
-                F.sum(F.when(F.col("deg") >= KCORE_K, 1).otherwise(0)), F.lit(0)
-            )
-            .cast("bigint")
-            .alias("n_remaining"),
-        ).select(F.lit(r).cast("int").alias("round"), "n_removed", "n_remaining")
-        trace = row if trace is None else trace.unionByName(row)
-        if r < KCORE_ROUNDS:
-            # no broadcast hint: the weak set is node-sized and round-1 can
-            # remove a large fraction of a real graph — AQE broadcasts it
-            # when it measures small and shuffles it when it isn't
-            weak = deg.filter(F.col("deg") < KCORE_K).select(F.col("a").alias("w"))
-            cur = (
-                cur.join(weak, cur.a == F.col("w"), "left_anti")
-                .join(weak, cur.b == F.col("w"), "left_anti")
-                .localCheckpoint(eager=False)
-            )
+            # COALESCE: once the graph peels empty, SUM over the empty degree
+            # table is NULL — the trace contract promises 0 rows, not NULLs
+            row = deg.agg(
+                F.coalesce(
+                    F.sum(F.when(F.col("deg") < KCORE_K, 1).otherwise(0)), F.lit(0)
+                )
+                .cast("bigint")
+                .alias("n_removed"),
+                F.coalesce(
+                    F.sum(F.when(F.col("deg") >= KCORE_K, 1).otherwise(0)), F.lit(0)
+                )
+                .cast("bigint")
+                .alias("n_remaining"),
+            ).select(F.lit(r).cast("int").alias("round"), "n_removed", "n_remaining")
+            trace = row if trace is None else trace.unionByName(row)
+            if r < KCORE_ROUNDS:
+                # no broadcast hint: the weak set is node-sized and round-1 can
+                # remove a large fraction of a real graph — AQE broadcasts it
+                # when it measures small and shuffles it when it isn't
+                weak = deg.filter(F.col("deg") < KCORE_K).select(F.col("a").alias("w"))
+                cur = (
+                    cur.join(weak, cur.a == F.col("w"), "left_anti")
+                    .join(weak, cur.b == F.col("w"), "left_anti")
+                    .transform(pins.checkpoint, eager=False)
+                )
     return trace
 
 
@@ -604,33 +607,34 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     # made it lazy — the fixed round count means no driver branch needs a
     # blocking count).  Round 14 dropped the per-round LABEL checkpoints —
     # see the loop comment below.
-    seeds = (
-        load_table(spark, "supplier", sf_dir)
-        .filter(F.col("s_suppkey") % LPA_SEED_MOD == 0)
-        .select(F.concat(F.lit("s:"), F.col("s_suppkey")).alias("node"))
-        .withColumn("lbl", F.col("node"))
-        .localCheckpoint(eager=False)
-    )
-    labels = seeds
-    for _ in range(LPA_ROUNDS):
-        contrib = edges.join(labels, edges.src == labels.node).select("dst", "lbl")
-        counts = contrib.groupBy("dst", "lbl").agg(F.count(F.lit(1)).alias("__n"))
-        w = W.partitionBy("dst").orderBy(F.desc("__n"), F.asc("lbl"))
-        winners = (
-            counts.withColumn("__rk", F.row_number().over(w))
-            .filter(F.col("__rk") == 1)
-            .select(F.col("dst").alias("node"), "lbl")
+    with generation("graph_label_propagation") as pins:
+        seeds = (
+            load_table(spark, "supplier", sf_dir)
+            .filter(F.col("s_suppkey") % LPA_SEED_MOD == 0)
+            .select(F.concat(F.lit("s:"), F.col("s_suppkey")).alias("node"))
+            .withColumn("lbl", F.col("node"))
+            .transform(pins.checkpoint, eager=False)
         )
-        # NOT checkpointed per round (round 14): each round references the
-        # previous labels exactly once, so the final plan inlines the fixed
-        # LPA_ROUNDS pipeline linearly — there is no multiplicative
-        # re-derivation for a checkpoint to cut, and each per-round
-        # checkpoint cost a full plan+AQE resolution pass at construction
-        # (interleaved A/B at sf0.1: 3.1-3.2 → 2.6-2.7 s, identical
-        # communities).  seeds (~5 readers) stays checkpointed above.
-        labels = seeds.unionByName(
-            winners.join(seeds.select("node"), "node", "left_anti")
-        )
+        labels = seeds
+        for _ in range(LPA_ROUNDS):
+            contrib = edges.join(labels, edges.src == labels.node).select("dst", "lbl")
+            counts = contrib.groupBy("dst", "lbl").agg(F.count(F.lit(1)).alias("__n"))
+            w = W.partitionBy("dst").orderBy(F.desc("__n"), F.asc("lbl"))
+            winners = (
+                counts.withColumn("__rk", F.row_number().over(w))
+                .filter(F.col("__rk") == 1)
+                .select(F.col("dst").alias("node"), "lbl")
+            )
+            # NOT checkpointed per round (round 14): each round references the
+            # previous labels exactly once, so the final plan inlines the fixed
+            # LPA_ROUNDS pipeline linearly — there is no multiplicative
+            # re-derivation for a checkpoint to cut, and each per-round
+            # checkpoint cost a full plan+AQE resolution pass at construction
+            # (interleaved A/B at sf0.1: 3.1-3.2 → 2.6-2.7 s, identical
+            # communities).  seeds (~5 readers) stays checkpointed above.
+            labels = seeds.unionByName(
+                winners.join(seeds.select("node"), "node", "left_anti")
+            )
     return labels.groupBy("lbl").agg(
         F.count(F.lit(1)).alias("n_members"),
         F.sum(F.expr("CASE WHEN node LIKE 'c:%' THEN 1 ELSE 0 END")).alias(
@@ -715,9 +719,10 @@ def graph_common_neighbors(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 12-15% faster under load (plain 5.2-6.0 s vs 4.4-5.2 s, identical
     # top-K) and a wash quiet — see graph_pagerank (round 14, verdict
     # r13 #5)
-    deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).localCheckpoint(
-        eager=False
-    )
+    with generation("graph_common_neighbors") as pins:
+        deg = sym.groupBy("a").agg(F.count(F.lit(1)).alias("deg")).transform(
+            pins.checkpoint, eager=False
+        )
     s1 = sym.select(F.col("b").alias("z"), F.col("a").alias("p"))
     s2 = sym.select(F.col("b").alias("z2"), F.col("a").alias("q"))
     cand = (

@@ -9,8 +9,8 @@ persist is freed with a plain ``unpersist()``: ``release_blocks`` walks
 every LogicalRDD leaf of the plan, so on a persisted frame it would also
 free checkpointed INPUTS that belong to someone else.  A frame of a
 stopped SparkContext is dropped without a call into it: its blocks died
-with the context.  Query-time checkpoints whose frames the caller may
-still read stay unowned.
+with the context.  Every checkpoint (``checkpoint``, the one localCheckpoint
+call) belongs to a generation, to the session cache or to a loop's ``Pins``.
 
 Per-call state (``generation``): a query pins what it keeps between calls
 into its call's ``Pins``; when the call returns, that ``Pins`` becomes the
@@ -30,8 +30,8 @@ round (0.6 → 2.0 → 8.0 → 42 → 265 s) with a CONSTANT logical plan string
 identical with AQE off and with an extra repartition.  Both planning and
 execution blow up, because both walk the nested metadata.
 
-``truncated_checkpoint`` cures it: materialize via localCheckpoint as
-before, then rebuild the frame as a BARE LogicalRDD over the same
+``checkpoint(df, truncate=True)`` cures it: materialize via localCheckpoint
+as before, then rebuild the frame as a BARE LogicalRDD over the same
 materialized rows (``internalCreateDataFrame`` — the same JVM constructor
 PySpark's own ``createDataFrame`` uses), which carries no captured
 partitioning/ordering.  Zero data movement, JVM-side only; losing the
@@ -78,9 +78,15 @@ def reclaim_shuffles(df: DataFrame) -> None:
         pass
 
 
-def truncated_checkpoint(df: DataFrame) -> DataFrame:
-    """localCheckpoint + strip captured plan metadata (see module doc)."""
-    c = df.localCheckpoint()
+def checkpoint(
+    df: DataFrame, eager: bool = True, disk: bool = False, truncate: bool = False
+) -> DataFrame:
+    """localCheckpoint, eager or lazy, optionally truncated (module doc), at
+    the default level or DISK_ONLY (round-11 sf100 fix: memory blocks filled
+    the storage pool mid-stage, UNABLE_TO_ACQUIRE_MEMORY)."""
+    c = df.localCheckpoint(eager, StorageLevel.DISK_ONLY if disk else None)
+    if not truncate:
+        return c
     try:
         spark = c.sparkSession
         jdf = spark._jsparkSession.internalCreateDataFrame(  # noqa: SLF001
@@ -89,14 +95,6 @@ def truncated_checkpoint(df: DataFrame) -> DataFrame:
         return DataFrame(jdf, spark)
     except Exception:  # pragma: no cover - private-API drift safety net
         return c
-
-
-def disk_checkpoint(df: DataFrame) -> DataFrame:
-    """Eager DISK_ONLY localCheckpoint (round-11 sf100 fix: memory-level
-    blocks filled the storage pool while the producing stage still ran, and
-    it died with UNABLE_TO_ACQUIRE_MEMORY).  Frames pinned this way are
-    read by sequential scans, so disk blocks cost one streamed read."""
-    return df.localCheckpoint(eager=True, storageLevel=StorageLevel.DISK_ONLY)
 
 
 def _stopped(df: DataFrame) -> bool:
@@ -123,8 +121,8 @@ class Pins:
             self._owned.append((df, checkpointed))
         return df
 
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        return self._own(disk_checkpoint(df), True)
+    def checkpoint(self, df: DataFrame, **how: bool) -> DataFrame:
+        return self._own(checkpoint(df, **how), True)
 
     def persist(
         self, df: DataFrame, level: StorageLevel = StorageLevel.MEMORY_AND_DISK

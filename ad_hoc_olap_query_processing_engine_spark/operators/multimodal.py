@@ -30,6 +30,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import generation
 from .registry import register
 
 FEATURE_DIM = 8
@@ -385,7 +386,8 @@ def mm_ahash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # call time in both modes; eager's blocking count() only serialized
     # the Python signature pass ahead of the query job (A/B at sf0.1:
     # 0.67-0.79 → 0.60-0.64 s, identical rows).
-    bands = _ahash_bands(spark, sf_dir).localCheckpoint(eager=False)
+    with generation("mm_ahash_dedup") as pins:
+        bands = _ahash_bands(spark, sf_dir).transform(pins.checkpoint, eager=False)
     sig = bands.select(
         "doc_id", F.posexplode("bands").alias("band_idx", "band_val")
     )

@@ -51,6 +51,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import generation
 from .registry import register
 from .relational import _dec
 
@@ -718,41 +719,42 @@ def rel_pareto_coverage(spark: SparkSession, sf_dir: str) -> DataFrame:
     # fact join+aggregate executed ~4× (12 parquet scans, 13 exchanges, zero
     # reuse; round-14 profile).  Checkpoint the customer-sized frame once:
     # at fact scale that is ONE fact join instead of four (guide §2.4).
-    per_cust = (
-        l.join(o.select("o_orderkey", "o_custkey"), l.l_orderkey == F.col("o_orderkey"))
-        .groupBy("o_custkey")
-        .agg((F.sum(_REV) * 10000).cast("bigint").alias("__cents"))
-        .localCheckpoint(eager=False)
-    )
-    # partition-safe global cumsum (same technique as rel_decile_spend's
-    # global NTILE): value-range buckets → per-bucket local rank/cumsum →
-    # broadcast count/sum offsets of all HIGHER-revenue buckets. No
-    # unpartitioned window ever materializes, so the plan survives a
-    # customer dimension of any size.
-    bounds = per_cust.agg(
-        F.min("__cents").alias("__lo"),
-        F.max("__cents").alias("__hi"),
-        F.count(F.lit(1)).alias("__n"),
-        F.sum("__cents").alias("__tot"),
-    )
-    b = per_cust.crossJoin(F.broadcast(bounds)).withColumn(
-        "__bkt",
-        F.width_bucket(
-            F.col("__cents"), F.col("__lo"), F.col("__hi") + F.lit(1), PARETO_BUCKETS
-        ),
-    )
-    wb = W.partitionBy("__bkt").orderBy(F.desc("__cents"), F.asc("o_custkey"))
-    local = b.select(
-        "__bkt",
-        "__n",
-        "__tot",
-        F.row_number().over(wb).alias("__rk_l"),
-        F.sum("__cents").over(wb.rowsBetween(W.unboundedPreceding, 0)).alias("__cum_l"),
-    )
-    # ≤ PARETO_BUCKETS rows, read by both sides of the offsets join
-    sizes = b.groupBy("__bkt").agg(
-        F.count(F.lit(1)).alias("__sz"), F.sum("__cents").alias("__bsum")
-    ).localCheckpoint(eager=False)
+    with generation("rel_pareto_coverage") as pins:
+        per_cust = (
+            l.join(o.select("o_orderkey", "o_custkey"), l.l_orderkey == F.col("o_orderkey"))
+            .groupBy("o_custkey")
+            .agg((F.sum(_REV) * 10000).cast("bigint").alias("__cents"))
+            .transform(pins.checkpoint, eager=False)
+        )
+        # partition-safe global cumsum (same technique as rel_decile_spend's
+        # global NTILE): value-range buckets → per-bucket local rank/cumsum →
+        # broadcast count/sum offsets of all HIGHER-revenue buckets. No
+        # unpartitioned window ever materializes, so the plan survives a
+        # customer dimension of any size.
+        bounds = per_cust.agg(
+            F.min("__cents").alias("__lo"),
+            F.max("__cents").alias("__hi"),
+            F.count(F.lit(1)).alias("__n"),
+            F.sum("__cents").alias("__tot"),
+        )
+        b = per_cust.crossJoin(F.broadcast(bounds)).withColumn(
+            "__bkt",
+            F.width_bucket(
+                F.col("__cents"), F.col("__lo"), F.col("__hi") + F.lit(1), PARETO_BUCKETS
+            ),
+        )
+        wb = W.partitionBy("__bkt").orderBy(F.desc("__cents"), F.asc("o_custkey"))
+        local = b.select(
+            "__bkt",
+            "__n",
+            "__tot",
+            F.row_number().over(wb).alias("__rk_l"),
+            F.sum("__cents").over(wb.rowsBetween(W.unboundedPreceding, 0)).alias("__cum_l"),
+        )
+        # ≤ PARETO_BUCKETS rows, read by both sides of the offsets join
+        sizes = b.groupBy("__bkt").agg(
+            F.count(F.lit(1)).alias("__sz"), F.sum("__cents").alias("__bsum")
+        ).transform(pins.checkpoint, eager=False)
     higher = sizes.select(
         F.col("__bkt").alias("__hb"), F.col("__sz").alias("__hsz"), F.col("__bsum").alias("__hbs")
     )
@@ -962,18 +964,19 @@ def rel_basket_affinity(spark: SparkSession, sf_dir: str) -> DataFrame:
     # once: at fact scale that is ONE scan + ONE dedup shuffle instead of
     # four (guide §2.4), and the ok-partitioned layout survives into the
     # self-join.  supports feeds both rule sides (the graph-deg precedent).
-    items = (
-        l.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
-        .repartition("ok")
-        .dropDuplicates(["ok", "pk"])
-        .localCheckpoint(eager=False)
-    )
-    n_orders = items.select(F.countDistinct("ok").alias("__n"))
-    supports = (
-        items.groupBy("pk")
-        .agg(F.count(F.lit(1)).alias("__sup"))
-        .localCheckpoint(eager=False)
-    )
+    with generation("rel_basket_affinity") as pins:
+        items = (
+            l.select(F.col("l_orderkey").alias("ok"), F.col("l_partkey").alias("pk"))
+            .repartition("ok")
+            .dropDuplicates(["ok", "pk"])
+            .transform(pins.checkpoint, eager=False)
+        )
+        n_orders = items.select(F.countDistinct("ok").alias("__n"))
+        supports = (
+            items.groupBy("pk")
+            .agg(F.count(F.lit(1)).alias("__sup"))
+            .transform(pins.checkpoint, eager=False)
+        )
     i2 = items.select("ok", F.col("pk").alias("pk2"))
     pairs = (
         items.join(i2, "ok")
@@ -1242,31 +1245,32 @@ def rel_dq_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one pass per fact table computes its row count AND its row-level
     # domain violations together (conditional aggregate); the anti-join
     # orphan checks are the only additional fact scans
-    l_stats = F.broadcast(
-        l.agg(
-            F.count(F.lit(1)).alias("__n_l"),
-            F.sum(F.when(~(F.col("l_extendedprice") > 0), 1).otherwise(0)).alias(
-                "__v_price"
-            ),
-            F.sum(
-                F.when(~F.col("l_discount").between(0.0, 0.1), 1).otherwise(0)
-            ).alias("__v_disc"),
-        ).localCheckpoint()
-    )
-    o_stats = F.broadcast(
-        o.agg(
-            F.count(F.lit(1)).alias("__n_o"),
-            F.sum(
-                F.when(
-                    ~F.col("o_orderdate").between(
-                        F.lit("1990-01-01").cast("timestamp"),
-                        F.lit("2005-01-01").cast("timestamp"),
-                    ),
-                    1,
-                ).otherwise(0)
-            ).alias("__v_date"),
-        ).localCheckpoint()
-    )
+    with generation("rel_dq_report") as pins:
+        l_stats = F.broadcast(
+            l.agg(
+                F.count(F.lit(1)).alias("__n_l"),
+                F.sum(F.when(~(F.col("l_extendedprice") > 0), 1).otherwise(0)).alias(
+                    "__v_price"
+                ),
+                F.sum(
+                    F.when(~F.col("l_discount").between(0.0, 0.1), 1).otherwise(0)
+                ).alias("__v_disc"),
+            ).transform(pins.checkpoint)
+        )
+        o_stats = F.broadcast(
+            o.agg(
+                F.count(F.lit(1)).alias("__n_o"),
+                F.sum(
+                    F.when(
+                        ~F.col("o_orderdate").between(
+                            F.lit("1990-01-01").cast("timestamp"),
+                            F.lit("2005-01-01").cast("timestamp"),
+                        ),
+                        1,
+                    ).otherwise(0)
+                ).alias("__v_date"),
+            ).transform(pins.checkpoint)
+        )
 
     def anti(name, fact, dim, cond, stats, n_col):
         v = fact.join(dim, cond, "left_anti").agg(

@@ -41,6 +41,7 @@ from pyspark.sql import functions as F
 
 from ..session import scoped_conf
 from ..sources.catalog import load_table
+from .iterutil import Pins, generation
 from .registry import register
 from .relational import _dec, _dsum
 from .session_cache import session_cached
@@ -336,7 +337,7 @@ register("rel_sales_opportunity", rel_sales_opportunity, REL_SALES_OPPORTUNITY_S
 HIER_TOP_NODES = 64
 
 
-def _run_recursive(spark: SparkSession, sql: str) -> DataFrame:
+def _run_recursive(spark: SparkSession, pins: Pins, sql: str) -> DataFrame:
     """Run a recursive-CTE query under a raised cteRecursionRowLimit,
     RESTORING the session default afterwards (``session.scoped_conf``).
     The walks here emit |parts| × log₂(max key)
@@ -347,18 +348,19 @@ def _run_recursive(spark: SparkSession, sql: str) -> DataFrame:
     the wrong guard for this shape — raise it to the int32 ceiling for the
     duration of THIS query only.  Because Spark reads session confs at
     execution (not DataFrame-build) time, the tiny aggregated result
-    (≤ 64 rows) is eagerly localCheckpoint-ed inside the raised window so
-    the returned DataFrame no longer depends on the conf and a later query
-    in the same session keeps the default recursion safety rail."""
+    (≤ 64 rows) is eagerly checkpointed into the caller's ``pins`` inside the
+    raised window so the returned DataFrame no longer depends on the conf
+    and a later query in the same session keeps the default safety rail."""
     with scoped_conf(spark, {"spark.sql.cteRecursionRowLimit": str(2**31 - 1)}):
-        return spark.sql(sql).localCheckpoint(eager=True)
+        return pins.checkpoint(spark.sql(sql))
 
 
 def rel_hierarchy_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, "lineitem", sf_dir).createOrReplaceTempView(
         "__hier_lineitem"
     )
-    return _run_recursive(spark, f"""
+    with generation("rel_hierarchy_rollup") as pins:
+        return _run_recursive(spark, pins, f"""
         WITH RECURSIVE per_part AS (
           SELECT l_partkey AS pk,
                  SUM(CAST(l_extendedprice AS DECIMAL(18,2))
@@ -424,7 +426,8 @@ register("rel_hierarchy_rollup", rel_hierarchy_rollup, REL_HIERARCHY_ROLLUP_SQL)
 
 def rel_bom_explosion(spark: SparkSession, sf_dir: str) -> DataFrame:
     load_table(spark, "part", sf_dir).createOrReplaceTempView("__bom_part")
-    return _run_recursive(spark, """
+    with generation("rel_bom_explosion") as pins:
+        return _run_recursive(spark, pins, """
         WITH RECURSIVE w(part, node, eff, d) AS (
           SELECT p_partkey, p_partkey, CAST(1 AS BIGINT), 0
           FROM __bom_part WHERE p_partkey >= 1

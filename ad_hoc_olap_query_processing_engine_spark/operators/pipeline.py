@@ -32,7 +32,7 @@ from .dedup import (
     cc_labels,
     shingle_postings,
 )
-from .iterutil import Pins, disk_checkpoint, generation, overlap
+from .iterutil import Pins, checkpoint, generation, overlap
 from .registry import register
 from .text import TEXT_QUALITY_SQL, quality_frame
 
@@ -604,11 +604,12 @@ def pipe_corpus_manifest(spark: SparkSession, sf_dir: str) -> DataFrame:
     # pipeline executed once per reference (18 parquet scans, 21 exchanges,
     # zero reuse; round-14 profile) — materialize the metadata once
     # (guide §8: decide with small rows; the heavy text never moves twice).
-    clean = (
-        base.join(contaminated, "doc_id", "left_anti")
-        .join(d.select("doc_id", "source"), "doc_id")
-        .localCheckpoint(eager=False)
-    )
+    with generation("pipe_corpus_manifest") as pins:
+        clean = (
+            base.join(contaminated, "doc_id", "left_anti")
+            .join(d.select("doc_id", "source"), "doc_id")
+            .transform(pins.checkpoint, eager=False)
+        )
     strata = clean.groupBy("lang", "source").agg(F.count(F.lit(1)).alias("__n_str"))
     tot = strata.agg(
         F.sum("__n_str").alias("__total"), F.count(F.lit(1)).alias("__k")
@@ -1394,8 +1395,8 @@ def _incr_base_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     def build() -> DataFrame:
         base_sh = shingle_postings(spark, sf_dir).filter(~_delta_pred())
         cand = _incr_base_cands(spark, sf_dir).select("doc_a", "doc_b").distinct()
-        return disk_checkpoint(
-            _verify_candidates(base_sh, cand, big=_corpus_is_big(sf_dir))
+        return checkpoint(
+            _verify_candidates(base_sh, cand, big=_corpus_is_big(sf_dir)), disk=True
         )
 
     return session_cached("mh_incr_base_pairs", spark, sf_dir, build)
@@ -1452,13 +1453,13 @@ def refresh_pair_store(
     # the band chain and the id-list chain are independent until ``fresh``
     # — materialize them concurrently (round 13)
     def _band_chain():
-        delta_bands = pins.checkpoint(lsh_bands(delta_sh))
+        delta_bands = pins.checkpoint(lsh_bands(delta_sh), disk=True)
         # read by FOUR joins below — materialize once, size once
-        dirty = pins.checkpoint(delta_bands.select("band", "key").distinct())
+        dirty = pins.checkpoint(delta_bands.select("band", "key").distinct(), disk=True)
         return delta_bands, dirty, dirty.count()
 
     def _id_chain():
-        delta_ids = pins.checkpoint(delta_docs.select("doc_id").distinct())
+        delta_ids = pins.checkpoint(delta_docs.select("doc_id").distinct(), disk=True)
         return delta_ids, delta_ids.count()
 
     (delta_bands, dirty, n_dirty), (delta_ids, n_delta) = overlap(
@@ -1470,7 +1471,7 @@ def refresh_pair_store(
     )
     # read by the fresh leg, the survivor leg and the refreshed candidate
     # store — materialize once
-    cand_dirty = pins.checkpoint(_windowed_bucket_pairs(dirty_members))
+    cand_dirty = pins.checkpoint(_windowed_bucket_pairs(dirty_members), disk=True)
     kept_cands = cands0.join(bdirty, ["band", "key"], "left_anti")
 
     # FRESH pairs without any store-sized shuffle (round-13 profile: the
@@ -1496,12 +1497,13 @@ def refresh_pair_store(
         return pins.checkpoint(
             cd_pairs.join(da, "doc_a", "left_semi")
             .unionByName(cd_pairs.join(db, "doc_b", "left_semi"))
-            .distinct()
+            .distinct(),
+            disk=True,
         )
 
     def _risk_chain():
         dirty_prov = cands0.join(bdirty, ["band", "key"], "left_semi")
-        pairs_at_risk = pins.checkpoint(dirty_prov.select(*pair_key).distinct())
+        pairs_at_risk = pins.checkpoint(dirty_prov.select(*pair_key).distinct(), disk=True)
         return pairs_at_risk, pairs_at_risk.count()
 
     fresh, (pairs_at_risk, n_risk) = overlap(_fresh_chain, _risk_chain)
@@ -1523,7 +1525,7 @@ def refresh_pair_store(
             .distinct()
         )
         sh_involved = postings_all.join(involved, "doc_id", "left_semi")
-        return pins.checkpoint(_verify_candidates(sh_involved, fresh, big=big))
+        return pins.checkpoint(_verify_candidates(sh_involved, fresh, big=big), disk=True)
 
     # REMOVED pairs, same discipline: a verified base pair can drop out
     # only if EVERY bucket that contributed it is dirty and none of the
@@ -1545,7 +1547,8 @@ def refresh_pair_store(
         removed = pins.checkpoint(
             pairs_at_risk.join(cd_pairs, pair_key, "left_anti").join(
                 clean_contrib, pair_key, "left_anti"
-            )
+            ),
+            disk=True,
         )
         return removed, removed.count()
 
@@ -1601,7 +1604,7 @@ def pipe_minhash_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         # checkpointed from the refresh — the result is a union of two bare
         # LogicalRDDs (the stream fold's pattern), so the refreshed table is
         # never rewritten a second time just to union its legs
-        kept = pins.checkpoint(frames["kept_base"])
+        kept = pins.checkpoint(frames["kept_base"], disk=True)
         pins.release(kept, frames["fresh_verified"])
     return kept.unionByName(frames["fresh_verified"])
 
@@ -1695,10 +1698,9 @@ def _cc_incremental_frames(spark: SparkSession, sf_dir: str) -> dict[str, DataFr
         .distinct()
     )
     # batch-sized: one row per OLD component touched by the batch
-    affected = disk_checkpoint(
-        delta_nodes.join(l0, "doc_id")
-        .select(F.col("cluster_id").alias("__al"))
-        .distinct()
+    affected = checkpoint(
+        delta_nodes.join(l0, "doc_id").select(F.col("cluster_id").alias("__al")).distinct(),
+        disk=True,
     )
     la = l0.select(F.col("doc_id").alias("doc_a"), F.col("cluster_id").alias("__la"))
     hit = F.broadcast(affected.withColumn("__hit", F.lit(1)))

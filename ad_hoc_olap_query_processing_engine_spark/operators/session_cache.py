@@ -20,8 +20,8 @@ Lifecycle rules (the leaks a long-lived embedding host would otherwise hit):
   ``DataFrame.unpersist`` only reaches the Dataset cache manager, but
   ``localCheckpoint`` blocks live on the checkpointed RDD itself and bypass
   it — so eviction also unpersists the underlying RDD of every LogicalRDD
-  leaf in the plan (which is exactly where localCheckpoint /
-  ``iterutil.truncated_checkpoint`` park their blocks);
+  leaf in the plan (which is exactly where ``iterutil.checkpoint`` parks
+  its blocks, truncated or not);
 - builds are serialized under a PER-ARTIFACT lock so concurrent first calls
   cannot double-build and leak the loser's persisted blocks, while builds of
   DIFFERENT artifacts may proceed concurrently (the bench warmup overlaps
@@ -59,11 +59,13 @@ def release_blocks(df: DataFrame) -> None:
         df.unpersist()
     except Exception:
         pass
-    # localCheckpoint / truncated_checkpoint frames are (or contain) a bare
+    # checkpointed frames (truncated or not) are, or contain, a bare
     # LogicalRDD; the blocks live on the PERSISTED ANCESTOR of its wrapped
     # RDD (the LogicalRDD often wraps a deserializer MapPartitionsRDD over
     # the checkpointed one), so walk a bounded slice of the lineage and
-    # unpersist every RDD whose storage level is set.
+    # unpersist the first RDD on each path whose storage level is set.
+    # The walk stops there: a lazy checkpoint that never ran still has its
+    # full lineage, and the stored RDDs above it belong to its inputs.
     try:
         plan = df._jdf.queryExecution().analyzed()  # noqa: SLF001
         leaves = plan.collectLeaves()
@@ -82,6 +84,7 @@ def release_blocks(df: DataFrame) -> None:
                 seen.add(rid)
                 if rdd.getStorageLevel().isValid():
                     rdd.unpersist(False)
+                    continue
                 deps = rdd.dependencies()
                 for j in range(deps.size()):
                     nxt.append(deps.apply(j).rdd())

@@ -62,7 +62,7 @@ from pyspark.sql import functions as F
 from pyspark.storagelevel import StorageLevel
 
 from ..sources.catalog import load_table
-from .iterutil import footer_rows, generation, overlap
+from .iterutil import checkpoint, footer_rows, generation, overlap
 from .registry import register
 
 N_QUERIES = 10
@@ -1808,7 +1808,7 @@ def pq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         # codebook — rebalance first so it is not a single-task scan stage.
         return _pq_nearest(
             _spread(elems).join(F.broadcast(cb.drop("m")), "d")
-        ).localCheckpoint()
+        ).transform(checkpoint)
 
     return session_cached("pq_codes", spark, sf_dir, build)
 
@@ -2025,7 +2025,7 @@ def _ivfpq_ccent(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .cast("bigint")
                 .alias("cc")
             )
-            .localCheckpoint()
+            .transform(checkpoint)
         )
 
     return session_cached("ivfpq_ccent", spark, sf_dir, build)
@@ -2037,7 +2037,7 @@ def _ivfpq_codebook(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def build() -> DataFrame:
         relems = _ivfpq_residual_elems(spark, sf_dir, fit_slice_only=True)
-        return _pq_fit(relems).localCheckpoint()
+        return checkpoint(_pq_fit(relems))
 
     return session_cached("ivfpq_codebook", spark, sf_dir, build)
 
@@ -2058,7 +2058,7 @@ def ivfpq_codes(spark: SparkSession, sf_dir: str) -> DataFrame:
         return (
             _pq_nearest(relems.join(F.broadcast(cb.drop("m")), "d"))
             .join(assigned.select("vec_id", "cell"), "vec_id")
-            .localCheckpoint()
+            .transform(checkpoint)
         )
 
     return session_cached("ivfpq_codes", spark, sf_dir, build)

@@ -17,6 +17,7 @@ from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import Pins, generation
 from .registry import register
 from .session_cache import session_cached
 
@@ -759,8 +760,9 @@ def text_trigram_lm(spark: SparkSession, sf_dir: str) -> DataFrame:
     # either way — the gate only picks where c3 is recomputed from.
     from .dedup import _corpus_is_big
 
-    if _corpus_is_big(sf_dir):
-        c3 = c3.localCheckpoint(eager=False)
+    with generation("text_trigram_lm") as pins:
+        if _corpus_is_big(sf_dir):
+            c3 = c3.transform(pins.checkpoint, eager=False)
     c2ctx = c3.groupBy("w1", "w2").agg(F.sum("c3").alias("c2"))
     c23 = c3.groupBy("w2", "w3").agg(F.sum("c3").alias("c23"))
     c2u = c3.groupBy("w2").agg(F.sum("c3").alias("cu2"))
@@ -1124,11 +1126,11 @@ def _bpe_pairs_expr(spell_col: str) -> str:
     )
 
 
-def _bpe_train(spark: SparkSession, sf_dir: str):
-    """Run the BPE_ROUNDS training loop; returns (spelled vocabulary
-    DataFrame (word, wf, spell), list of one-row merge DataFrames).
-    Shared by text_bpe_merges (reports the vocabulary) and text_bpe_encode
-    (applies the trained tokenizer to the corpus)."""
+def _bpe_train(spark: SparkSession, sf_dir: str, pins: Pins):
+    """Run the BPE_ROUNDS training loop, checkpointing into the caller's
+    ``pins``; returns (spelled vocabulary DataFrame (word, wf, spell), list
+    of one-row merge DataFrames).  Shared by text_bpe_merges,
+    text_bpe_encode and pipe_tokenizer_fertility."""
     d = load_table(spark, "documents", sf_dir)
     words = (
         d.select(F.explode(F.split("text", " ")).alias("word"))
@@ -1160,7 +1162,7 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
             pair_counts.orderBy(F.desc("cnt"), F.asc("pair"))
             .limit(1)
             .select(F.col("pair").alias("__mp"), F.col("cnt").alias("__mc"))
-            .localCheckpoint()
+            .transform(pins.checkpoint)
         )
         merges.append(top)
         wrapped = F.concat(F.lit(_BPE_SEP), F.col("spell"), F.lit(_BPE_SEP))
@@ -1179,14 +1181,15 @@ def _bpe_train(spark: SparkSession, sf_dir: str):
                 "wf",
                 F.expr("substring(__m, 2, length(__m) - 2)").alias("spell"),
             )
-            .localCheckpoint()
+            .transform(pins.checkpoint)
         )
 
     return cur, merges
 
 
 def text_bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur, merges = _bpe_train(spark, sf_dir)
+    with generation("text_bpe_merges") as pins:
+        cur, merges = _bpe_train(spark, sf_dir, pins)
     tokens = (
         cur.select("wf", F.explode(F.split("spell", _BPE_SEP)).alias("token"))
         .groupBy("token")
@@ -1288,7 +1291,8 @@ register("text_bpe_merges", text_bpe_merges, _bpe_sql())
 
 
 def text_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur, _merges = _bpe_train(spark, sf_dir)
+    with generation("text_bpe_encode") as pins:
+        cur, _merges = _bpe_train(spark, sf_dir, pins)
     vocab = cur.select(
         "word", F.size(F.split("spell", _BPE_SEP)).alias("n_sym")
     )
@@ -1699,7 +1703,8 @@ register("text_ngram_novelty", text_ngram_novelty, _ngram_novelty_sql())
 
 
 def pipe_tokenizer_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    cur, _merges = _bpe_train(spark, sf_dir)
+    with generation("pipe_tokenizer_fertility") as pins:
+        cur, _merges = _bpe_train(spark, sf_dir, pins)
     vocab = cur.select("word", F.size(F.split("spell", _BPE_SEP)).alias("n_sym"))
     d = load_table(spark, "documents", sf_dir)
     words = (

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..sources.catalog import load_table
+from .iterutil import generation
 from .registry import register
 
 BUCKET_SECS = 86400
@@ -1434,21 +1435,22 @@ STL_PERIOD = 7
 
 def ts_stl_decompose(spark: SparkSession, sf_dir: str) -> DataFrame:
     e = load_table(spark, "events", sf_dir)
-    daily = (
-        e.groupBy(
-            "event_type",
-            F.floor(F.unix_micros("ts") / 86_400_000_000).cast("bigint").alias("day"),
+    with generation("ts_stl_decompose") as pins:
+        daily = (
+            e.groupBy(
+                "event_type",
+                F.floor(F.unix_micros("ts") / 86_400_000_000).cast("bigint").alias("day"),
+            )
+            .agg(
+                (F.sum(F.col("value").cast("decimal(18,4)")) * 10000)
+                .cast("bigint")
+                .alias("value_e4")
+            )
+            # the tiny (|types| × |days|) panel feeds the trend window, the
+            # seasonal aggregate AND the final select — checkpoint it so the
+            # fact scan runs once, not once per re-inlined consumer
+            .transform(pins.checkpoint)
         )
-        .agg(
-            (F.sum(F.col("value").cast("decimal(18,4)")) * 10000)
-            .cast("bigint")
-            .alias("value_e4")
-        )
-        # the tiny (|types| × |days|) panel feeds the trend window, the
-        # seasonal aggregate AND the final select — checkpoint it so the
-        # fact scan runs once, not once per re-inlined consumer
-        .localCheckpoint()
-    )
     half = STL_PERIOD // 2
     # RANGE (not ROWS) on the numeric day: with a gapped panel a ROWS frame
     # would silently span more than 7 calendar days and still pass the

@@ -137,7 +137,7 @@ def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # Catalyst's union constraint rule.  The pruned/recomputed stores
         # (cands, pairs) genuinely change per batch and keep their
         # generation checkpoints.
-        sh_b = pins.checkpoint(_shingles(bdf))
+        sh_b = pins.checkpoint(_shingles(bdf), disk=True)
         postings_all = state["postings"].unionByName(sh_b)
         frames = refresh_pair_store(
             spark,
@@ -159,8 +159,8 @@ def stream_minhash_maintenance(spark: SparkSession, sf_dir: str) -> DataFrame:
         # found: band#N); unions of bare LogicalRDDs rewrite cleanly.
         # The two pruned-store generation legs are independent — overlap.
         kept_cands_ck, kept_base_ck = overlap(
-            lambda: pins.checkpoint(frames["kept_cands"]),
-            lambda: pins.checkpoint(frames["kept_base"]),
+            lambda: pins.checkpoint(frames["kept_cands"], disk=True),
+            lambda: pins.checkpoint(frames["kept_base"], disk=True),
         )
         legs.extend([sh_b, frames["delta_bands"]])
         state["bands"] = state["bands"].unionByName(frames["delta_bands"])

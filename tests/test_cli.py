@@ -5,6 +5,7 @@ from __future__ import annotations
 
 import subprocess
 import sys
+from pathlib import Path
 
 SPEC_SALES = """\
 cust,avg_quant_NY
@@ -29,7 +30,7 @@ def _run(args: list[str]) -> subprocess.CompletedProcess:
         capture_output=True,
         text=True,
         timeout=300,
-        cwd="/root/repo",
+        cwd=Path(__file__).resolve().parents[1],  # this checkout's own package
     )
 
 

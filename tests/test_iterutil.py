@@ -16,7 +16,7 @@ import pytest
 
 from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import (
     Pins,
-    disk_checkpoint,
+    checkpoint,
     footer_rows,
     generation,
     overlap,
@@ -147,9 +147,9 @@ class TestPins:
     def test_release_frees_both_kinds_and_leaves_kept(self, spark):
         pins = Pins()
         ids0 = _stored_rdd_ids(spark)
-        ck = pins.checkpoint(spark.range(100))
+        ck = pins.checkpoint(spark.range(100), disk=True)
         ids1 = _stored_rdd_ids(spark)
-        kept_ck = pins.checkpoint(spark.range(50))
+        kept_ck = pins.checkpoint(spark.range(50), disk=True)
         ids2 = _stored_rdd_ids(spark)
         ps = pins.persist(spark.range(30))
         ps.count()
@@ -195,7 +195,7 @@ class TestPins:
         )
 
         ids0 = _stored_rdd_ids(spark)
-        base = disk_checkpoint(spark.range(100))  # owned by someone else
+        base = checkpoint(spark.range(100), disk=True)  # owned by someone else
         base_ids = _stored_rdd_ids(spark) - ids0
         pins = Pins()
         top = pins.persist(base.selectExpr("id * 2 AS x"))

@@ -1,6 +1,6 @@
 """Guard: one way to materialize and one stream harness.  Thread-pool
-fan-out, eager DISK_ONLY checkpoints, parquet-footer reads and module-level
-``Pins`` owners live in operators/iterutil.py; cache invalidation in
+fan-out, every ``localCheckpoint`` call, parquet-footer reads and
+module-level ``Pins`` owners live in operators/iterutil.py; cache invalidation in
 operators/session_cache.py; memory-sink drains and one-file-per-trigger readers
 in streaming/windows.py; session-conf unsets in session.py (scoped_conf);
 no path is rooted at a literal /tmp.  A hand-rolled copy anywhere else in
@@ -21,7 +21,9 @@ MODULE = "operators/iterutil.py"
 STREAM = "streaming/windows.py"
 RULES = [
     ("thread pool", r"ThreadPoolExecutor\(", {MODULE, "operators/warmup.py"}),
-    ("DISK_ONLY localCheckpoint", r"localCheckpoint\([^)]*DISK_ONLY", {MODULE}),
+    # a checkpoint is taken through iterutil.checkpoint / Pins.checkpoint,
+    # so each one has an owner (a generation, the session cache or a loop)
+    ("localCheckpoint call", r"localCheckpoint\(", {MODULE}),
     ("parquet footer read", r"ParquetFile\([^)]*\)\.metadata", {MODULE}),
     ("group-table persist knob", r"PERSIST_GROUP_TABLE", set()),
     ("memory-sink drain", r"format\(\s*[\"']memory[\"']\s*\)", {STREAM}),
@@ -50,9 +52,10 @@ def _sources() -> dict[str, str]:
 def test_no_hand_rolled_copy(rule, pattern, allowed):
     rx = re.compile(pattern, re.S)
     offenders = [
-        name
+        f"{name}:{text.count(chr(10), 0, m.start()) + 1}"
         for name, text in _sources().items()
-        if name not in allowed and rx.search(text)
+        if name not in allowed
+        for m in rx.finditer(text)
     ]
     assert not offenders, f"{rule} outside {sorted(allowed) or 'nowhere'}: {offenders}"
 

@@ -59,11 +59,11 @@ def _checkpoint_rdd_id(df) -> int:
 class TestSessionCacheEviction:
     def _build_ckpt(self, spark, tag: str):
         from ad_hoc_olap_query_processing_engine_spark.operators.iterutil import (
-            truncated_checkpoint,
+            checkpoint,
         )
 
         df = spark.range(100).withColumn("tag", F.lit(tag))
-        return truncated_checkpoint(df)
+        return checkpoint(df, truncate=True)
 
     def test_unpersist_alone_does_not_free_checkpoint_blocks(self, spark):
         """The bug's premise, pinned so a Spark version that fixes it
