@@ -21,6 +21,7 @@ MODULE = "operators/iterutil.py"
 STREAM = "streaming/windows.py"
 RULES = [
     ("thread pool", r"ThreadPoolExecutor\(", {MODULE, "operators/warmup.py"}),
+    ("DISK_ONLY localCheckpoint", r"localCheckpoint\([^)]*DISK_ONLY", {MODULE}),
     # a checkpoint is taken through iterutil.checkpoint / Pins.checkpoint,
     # so each one has an owner (a generation, the session cache or a loop)
     ("localCheckpoint call", r"localCheckpoint\(", {MODULE}),
