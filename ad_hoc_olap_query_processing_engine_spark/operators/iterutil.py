@@ -49,6 +49,7 @@ from contextlib import contextmanager
 from typing import Any
 
 from pyspark.sql import DataFrame
+from pyspark.sql.types import StructType
 from pyspark.storagelevel import StorageLevel
 
 WORK_BYTES_PER_PART = 32 << 20  # guide §2.2: partitions sized by bytes
@@ -208,3 +209,55 @@ def footer_rows(path: str) -> int | None:
         return int(pq.ParquetFile(path).metadata.num_rows)
     except (OSError, ValueError, ImportError):
         return None
+
+
+def footer_arrow_schema(path: str):
+    """Arrow schema from a parquet footer (driver-side file read, no Spark
+    job), or None if it cannot be read (the errors of :func:`footer_rows`)."""
+    try:
+        import pyarrow.parquet as pq
+
+        return pq.read_schema(path)
+    except (OSError, ValueError, ImportError):
+        return None
+
+
+def _is_nanos(t) -> bool:
+    import pyarrow as pa
+
+    return pa.types.is_timestamp(t) and t.unit == "ns"
+
+
+def _read_alike(t) -> bool:
+    """False where Spark's parquet reader types a column otherwise than
+    ``from_arrow_type``: durations (bigint), nulls (int), times (rejected)
+    and a nanos timestamp nested in another type (bigint)."""
+    import pyarrow as pa
+
+    if pa.types.is_duration(t) or pa.types.is_time(t) or pa.types.is_null(t) or _is_nanos(t):
+        return False
+    return all(_read_alike(t.field(i).type) for i in range(t.num_fields))
+
+
+def footer_schema(path: str) -> tuple[StructType | None, list[str]]:
+    """The schema Spark's parquet reader infers for ``path``, taken from the
+    footer instead of a schema-inference job, and the file's nanos timestamp
+    columns, typed bigint as ``spark.sql.legacy.parquet.nanosAsLong`` reads
+    them.  The schema is None when the footer cannot be read or holds a type
+    that does not map the way Spark reads it (then Spark must infer it); the
+    nanos columns are [] when the footer cannot be read."""
+    arrow = footer_arrow_schema(path)
+    if arrow is None:
+        return None, []
+    import pyarrow as pa
+    from pyspark.errors import PySparkTypeError
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    nanos = [f.name for f in arrow if _is_nanos(f.type)]
+    arrow = pa.schema([f.with_type(pa.int64()) if f.name in nanos else f for f in arrow])
+    if not all(_read_alike(f.type) for f in arrow):
+        return None, nanos
+    try:
+        return from_arrow_schema(arrow, prefer_timestamp_ntz=True), nanos
+    except PySparkTypeError:  # unsigned ints, float16, ...
+        return None, nanos

@@ -42,6 +42,7 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from ..operators.iterutil import footer_arrow_schema
 from ..operators.registry import register
 
 _ARROW_TO_SPARK = {
@@ -114,9 +115,10 @@ class ParquetRowGroupSource(DataSource):
         return [c.strip() for c in cols.split(",")] if cols else None
 
     def schema(self) -> str:
-        import pyarrow.parquet as pq
-
-        arrow_schema = pq.read_schema(self.options["path"])
+        path = self.options["path"]
+        arrow_schema = footer_arrow_schema(path)
+        if arrow_schema is None:
+            raise ValueError(f"pyrowgroup: cannot read the parquet footer of {path!r}")
         return _spark_ddl(arrow_schema, self._columns())
 
     def reader(self, schema) -> DataSourceReader:

@@ -26,7 +26,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from ..sources.catalog import load_table
+from ..sources.catalog import load_table, normalize_timestamps, read_parquet
 from ..operators.registry import register
 from ..session import scoped_conf
 
@@ -54,10 +54,11 @@ def file_stream(spark: SparkSession, path: str, schema: StructType) -> DataFrame
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """readStream over the events parquet. The nanos `ts` arrives as int64
-    (same legacy conf as the batch reader) and is rebuilt to a micros
-    timestamp before any event-time logic."""
-    load_table(spark, "events", sf_dir)  # sets the nanos-as-long conf
+    """readStream over the events parquet, with the batch reader's schema
+    (taken from the footer, no Spark job) and its timestamp normalization:
+    the nanos `ts` arrives as int64 and is rebuilt to a micros timestamp, a
+    no-tz micros `ts` is cast from TIMESTAMP_NTZ (which withWatermark
+    rejects), before any event-time logic."""
     path = os.path.join(sf_dir, "events.parquet")
     # Spark's file stream source requires a directory; the driver data is a
     # single file → expose it through a symlink dir (read-only testdata).
@@ -74,17 +75,8 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
             os.symlink(path, link)
     else:
         os.symlink(path, link)
-    raw_schema = spark.read.parquet(path).schema
-    stream = file_stream(spark, link_dir, raw_schema)
-    ts_type = dict((f.name, f.dataType.simpleString()) for f in raw_schema).get("ts")
-    if ts_type == "bigint":
-        stream = stream.withColumn("ts", F.expr("timestamp_micros(ts DIV 1000)"))
-    elif ts_type == "timestamp_ntz":
-        # timestamp[us] no-tz parquet → TIMESTAMP_NTZ, which withWatermark
-        # rejects; load_table() above already pinned session tz to UTC, so
-        # this cast preserves the stored epoch micros exactly.
-        stream = stream.withColumn("ts", F.col("ts").cast("timestamp"))
-    return stream
+    raw, nanos_cols = read_parquet(spark, path)
+    return normalize_timestamps(spark, file_stream(spark, link_dir, raw.schema), nanos_cols)
 
 
 # Stateful operators instantiate one state-store (checkpoint dir, provider,

@@ -1,6 +1,8 @@
 """Guard: one way to materialize and one stream harness.  Thread-pool
 fan-out, every ``localCheckpoint`` call, parquet-footer reads and
-module-level ``Pins`` owners live in operators/iterutil.py; cache invalidation in
+module-level ``Pins`` owners live in operators/iterutil.py; a parquet read
+that infers its schema only in sources/catalog.py (the fallback) and the
+streaming/volume_cert.py script; cache invalidation in
 operators/session_cache.py; memory-sink drains and one-file-per-trigger readers
 in streaming/windows.py; session-conf unsets in session.py (scoped_conf);
 no path is rooted at a literal /tmp.  A hand-rolled copy anywhere else in
@@ -25,7 +27,16 @@ RULES = [
     # a checkpoint is taken through iterutil.checkpoint / Pins.checkpoint,
     # so each one has an owner (a generation, the session cache or a loop)
     ("localCheckpoint call", r"localCheckpoint\(", {MODULE}),
-    ("parquet footer read", r"ParquetFile\([^)]*\)\.metadata", {MODULE}),
+    ("parquet footer read", r"ParquetFile\([^)]*\)\.metadata|read_schema\(", {MODULE}),
+    # a table read takes its schema from the footer and starts no job; only
+    # the catalog's fallback for a footer that cannot be read or mapped
+    # infers, and volume_cert (a script, not a query) reads directories it
+    # wrote itself
+    (
+        "schema-inferring parquet read",
+        r"\.read\.parquet\(",
+        {"sources/catalog.py", "streaming/volume_cert.py"},
+    ),
     ("group-table persist knob", r"PERSIST_GROUP_TABLE", set()),
     ("memory-sink drain", r"format\(\s*[\"']memory[\"']\s*\)", {STREAM}),
     ("one-file-per-trigger reader", r"maxFilesPerTrigger", {STREAM}),
